@@ -91,6 +91,22 @@ def test_train_local_overflow_falls_back(spark):
     assert got == _reference_train(rows, 2, 2, True)
 
 
+def test_train_local_declines_int64_min_feature(spark):
+    # np.abs(-2^63) wraps to -2^63, so an abs-based max |x| reads this
+    # column as 0 and the replay's round-2 margin (-2^63 * -2^63)
+    # silently wraps.  The bound must see |x| = 2^63 and decline; the
+    # distributed loop then runs (round 1's sums still fit in int64).
+    rows = [(1, [1, -(1 << 63)]), (1, [1, 0])]
+    df = spark.createDataFrame(
+        [(y, *x) for y, x in rows], ["y", "f0", "f1"]
+    ).select(*[F.col(c).cast("long") for c in ["y", "f0", "f1"]])
+    from zinger_spark.operators.classifier import _train_local
+
+    assert _train_local(df, "y", ["f0", "f1"], 2, True, 2) is None
+    got = perceptron_train(df, "y", ["f0", "f1"], rounds=1)
+    assert got == _reference_train(rows, 2, 1, True)
+
+
 def test_train_is_partitioning_invariant(spark):
     rng = random.Random(7)
     rows = [

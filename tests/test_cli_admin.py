@@ -89,30 +89,6 @@ def test_sync_batches_resume_skips_already_produced(spark, tmp_path):
     assert got == [5, 6, 7, 8, 9]
 
 
-def test_sync_once_single_pass(spark, tmp_path):
-    """sync_once: one plan, rows in offset order, count observed during
-    the produce action itself (produce MUST run an action)."""
-    from zinger_spark.sources.pool import Pool
-    from zinger_spark.streaming.to_kafka import sync_once
-
-    pool = Pool.create(spark, str(tmp_path / "p1"))
-    rows = [
-        {"kafka": {"topic": "out", "partition": 0, "offset": i}, "v": i}
-        for i in (3, 1, 4, 0, 2)
-    ]
-    pool.load_batch(
-        spark.createDataFrame(
-            rows, "kafka struct<topic:string,partition:long,offset:long>, v long"
-        )
-    )
-    got = []
-    n = sync_once(pool, "out", 1, lambda df: got.extend(
-        r["kafka"]["offset"] for r in df.collect()
-    ))
-    assert n == 4
-    assert got == [1, 2, 3, 4]  # ordered, offset 0 excluded
-
-
 # ---------------------------------------------------------------------------
 # consume -offset flag mapping (cmd/zync/consume/command.go:56-57)
 

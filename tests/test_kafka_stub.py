@@ -14,6 +14,8 @@ from __future__ import annotations
 import json
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from zinger_spark.kafka_stub import StubBroker
@@ -125,6 +127,54 @@ def test_record_batch_v2_gzip_and_mixed_generations():
     assert [(m.offset, m.key) for m in out] == [(0, b"a"), (1, b"b")]
     # trailing partial v2 batch is dropped
     assert [(m.key) for m in decode_records(mixed[:-4])] == [b"a"]
+
+
+# crc32c_many / encode_record_batches are the only produce encoders
+# wire_produce_df uses, so each is checked against its scalar twin.
+
+_ragged = st.one_of(st.binary(max_size=7), st.binary(max_size=300))
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    bufs=st.one_of(
+        st.lists(_ragged, max_size=63),  # short path: scalar per buffer
+        st.lists(_ragged, min_size=64, max_size=100),  # numpy lockstep
+    )
+)
+def test_crc32c_many_equals_scalar(bufs):
+    from zinger_spark.kafka_wire import crc32c, crc32c_many
+
+    # always some empty and sub-qword buffers among the ragged ones
+    bufs = bufs + [b"", b"\x01", b"1234567"] if len(bufs) >= 64 else bufs
+    assert crc32c_many(bufs) == [crc32c(b) for b in bufs]
+
+
+_record = st.tuples(
+    st.one_of(st.none(), st.binary(max_size=16)),
+    st.one_of(st.none(), st.binary(max_size=64)),
+)
+_batch = st.lists(_record, min_size=1, max_size=8)
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    batches=st.one_of(
+        st.lists(_batch, min_size=1, max_size=63),
+        st.lists(_batch, min_size=64, max_size=72),
+    ),
+    timestamp_ms=st.integers(0, 1 << 41),
+    compression=st.sampled_from(["none", "gzip"]),
+)
+def test_encode_record_batches_equals_mapped(batches, timestamp_ms, compression):
+    from zinger_spark.kafka_wire import encode_record_batch, encode_record_batches
+
+    assert encode_record_batches(
+        batches, timestamp_ms=timestamp_ms, compression=compression
+    ) == [
+        encode_record_batch(b, timestamp_ms=timestamp_ms, compression=compression)
+        for b in batches
+    ]
 
 
 def test_snappy_lz4_zstd_gated():
@@ -285,12 +335,12 @@ def test_wire_topic_admin_conformance(broker):
     admin.close()
 
 
-def test_open_admin_falls_back_to_wire(broker):
+def test_open_admin_returns_wire_admin(broker):
     from zinger_spark.kafka_admin import WireTopicAdmin, open_admin
 
     admin = open_admin(broker.bootstrap)
-    # kafka-python is absent in this container -> wire adapter
     assert isinstance(admin, WireTopicAdmin)
+    admin.close()
     assert open_admin(None) is None
     # unreachable broker -> None, not an exception
     assert open_admin("127.0.0.1:1") is None
@@ -432,7 +482,7 @@ def test_to_kafka_replay_through_stub(spark, tmp_path, broker):
 
 # ---------------------------------------------------------------------------
 # CLI --transport wire: produce -> consume -> to-kafka, all through the
-# stub with no JVM Kafka jar and no kafka-python.
+# stub with no JVM Kafka jar.
 
 
 def test_cli_wire_produce_consume_to_kafka(spark, tmp_path, broker, capsys, monkeypatch):
@@ -645,6 +695,80 @@ def test_cli_consume_no_meta_shape(spark, broker, capsys, monkeypatch):
     out = capsys.readouterr().out
     assert rc == 0
     assert out.splitlines()[0] == '{key:"k0",value:{seqno:1}}'
+
+
+@pytest.mark.parametrize("versions", [None, (0, 1, 2)])
+def test_wire_produce_df_sync_and_pipelined_logs_identical(
+    spark, broker, monkeypatch, versions
+):
+    """Both send modes of the one produce loop append the same broker
+    log — None keys, empty values, several gzip batches, across encode
+    groups (two batches per group here, the last group partial).  With
+    Produce capped at v2 (``versions``) the loop encodes magic-1
+    MessageSets instead of RecordBatch v2, and the log is still the
+    same."""
+    import zinger_spark.kafka_wire as kw
+
+    if versions is not None:
+        monkeypatch.setattr(kw.KafkaWireClient, "_PRODUCE_VERSIONS", versions)
+    monkeypatch.setattr(kw, "_ENCODE_GROUP", 2)
+    message_sets, record_groups = [], []
+    encode_ms, encode_rbs = kw.encode_message_set, kw.encode_record_batches
+
+    def spy_ms(*a, **k):
+        message_sets.append(a[0])
+        return encode_ms(*a, **k)
+
+    def spy_rbs(*a, **k):
+        record_groups.append([len(b) for b in a[0]])
+        return encode_rbs(*a, **k)
+
+    monkeypatch.setattr(kw, "encode_message_set", spy_ms)
+    monkeypatch.setattr(kw, "encode_record_batches", spy_rbs)
+    rows = [
+        (None if i % 4 == 0 else f"k{i}", "" if i % 5 == 0 else f"v{i}")
+        for i in range(23)
+    ]
+    df = spark.createDataFrame(rows, "key string, value string")
+    for topic, pipelined in (("SyncT", False), ("PipeT", True)):
+        broker.seed(topic, 1)
+        assert kw.wire_produce_df(
+            df, broker.bootstrap, topic, batch_size=5, compression="gzip",
+            pipelined=pipelined,
+        ) == 23
+    assert broker.log("SyncT") == broker.log("PipeT")
+    assert [(k, v) for k, v, *_ in broker.log("SyncT")] == [
+        (None if k is None else k.encode(), v.encode()) for k, v in rows
+    ]
+    # 5 batches (5+5+5+5+3) per mode, all MessageSets when capped at
+    # v2, else RecordBatches encoded in groups of 2+2+1
+    assert [len(m) for m in message_sets] == (
+        [5, 5, 5, 5, 3] * 2 if versions else []
+    )
+    assert record_groups == ([] if versions else [[5, 5], [5, 5], [3]] * 2)
+
+
+def test_produce_premade_batch_must_match_version(broker):
+    """A pre-encoded record set of the wrong generation for the
+    negotiated Produce version is refused before it is sent."""
+    from zinger_spark.kafka_wire import (
+        KafkaWireClient,
+        KafkaWireError,
+        encode_message_set,
+        encode_record_batch,
+    )
+
+    broker.seed("PremadeT", 1)
+    rb = encode_record_batch([(None, b"a")])
+    ms = encode_message_set([(None, b"a")])
+    with KafkaWireClient(broker.bootstrap) as c:
+        with pytest.raises(KafkaWireError, match="generation"):
+            c.produce("PremadeT", 0, [], api_version=2, premade_batch=rb)
+        with pytest.raises(KafkaWireError, match="generation"):
+            c.produce("PremadeT", 0, [], api_version=3, premade_batch=ms)
+        c.produce("PremadeT", 0, [], api_version=2, premade_batch=ms)
+        c.produce("PremadeT", 0, [], api_version=3, premade_batch=rb)
+    assert [v for _, v, *_ in broker.log("PremadeT")] == [b"a", b"a"]
 
 
 def test_wire_produce_df_pipelined(spark, broker):

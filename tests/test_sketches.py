@@ -10,6 +10,8 @@ sketches are integer-exact so results cannot drift with partitioning).
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row, functions as F
 
 from zinger_spark.operators import sketches as sk
@@ -297,6 +299,50 @@ def test_pagerank_local_numpy_matches_dict_and_distributed(spark):
             )
         )
         assert sorted(got_np) == sorted(got_py) == want
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    pairs=st.lists(
+        st.tuples(st.integers(0, 15), st.integers(0, 15)),
+        min_size=1, max_size=50, unique=True,
+    ),
+    damping_pct=st.integers(86, 99),
+    iterations=st.integers(1, 30),
+    # 10^9, or the largest scale the numpy replay's overflow guard
+    # admits for 16 nodes: ranks then run near the int64 limit
+    scale=st.sampled_from([1_000_000_000, ((1 << 63) - 1) // (7 * 100 * 16)]),
+)
+def test_pagerank_replay_equals_distributed_high_damping(
+    spark, pairs, damping_pct, iterations, scale
+):
+    """Above d = 0.85 the rank mass still cannot grow (graph.py's
+    overflow guard), so both driver replays equal the distributed loop
+    for any damping, iteration count and scale the guard admits."""
+    from zinger_spark.operators.graph import _pagerank_local_rows
+
+    e = spark.createDataFrame(pairs, "src long, dst long")
+    kw = dict(
+        iterations=iterations, damping_pct=damping_pct, scale=scale,
+        base=scale * (100 - damping_pct) // 100, symmetric=False,
+    )
+    got_np = _pagerank_local_rows(e, n_edges=60_001, **kw)
+    got_py = _pagerank_local_rows(e, n_edges=len(pairs), **kw)
+    want = sorted(
+        map(
+            tuple,
+            pagerank_fixed_point(
+                e, iterations, damping_pct, scale, local_threshold=0
+            ).collect(),
+        )
+    )
+    assert got_np is not None
+    assert sorted(got_np) == sorted(got_py) == want
 
 
 def test_pagerank_mass_conservation_bound(spark):

@@ -458,7 +458,7 @@ def cmd_info(args) -> int:
             return 1
         admin = open_admin(args.brokers)
         if admin is None:
-            print("no Kafka client library available for --brokers mode", file=sys.stderr)
+            print(f"broker unreachable at {args.brokers}", file=sys.stderr)
             return 1
         try:
             low, high = admin.watermarks(args.topic)
@@ -642,7 +642,7 @@ def cmd_from_kafka(args) -> int:
         transform = (lambda b: shape(decode(b))) if decode else shape
     if getattr(args, "transport", "spark") == "wire":
         # bounded one-shot ingest over the wire client (no JVM Kafka
-        # source, no kafka-python): resume per (topic, partition) from
+        # source): resume per (topic, partition) from
         # the pool, fetch [start, min(head, start + thresh)), envelope,
         # decode, ONE atomic commit.  Idempotent across runs because
         # the next run resumes past the stored max — the exactly-once
@@ -683,19 +683,19 @@ def cmd_from_kafka(args) -> int:
                 if int(s) >= 0
             },
         )
-        # --dedup-values / --track-distinct: same semantics as the
-        # streaming path's commit_batch, inside the writer lock so the
-        # anti-join / HLL merge can't race another writer
+        # --dedup-values / --track-distinct: the streaming path's
+        # locked commit section, shared
+        dedup = getattr(args, "dedup_values", False)
         with pool.writer_lock():
-            if getattr(args, "dedup_values", False):
-                env = fk._dedup_against_pool(pool, env).localCheckpoint(eager=True)
+            commit_id, env = fk.load_under_lock(
+                pool, env, dedup_values=dedup,
+                track_distinct=getattr(args, "track_distinct", None),
+            )
+            if commit_id is None:
+                print("nothing new to ingest")
+                return 0
+            if dedup:
                 n = env.count()
-                if n == 0:
-                    print("nothing new to ingest")
-                    return 0
-            commit_id = pool.load_batch(env)
-            if getattr(args, "track_distinct", None):
-                fk._merge_hll_sidecar(pool, env, args.track_distinct)
         print(f"pool {args.pool} commit {commit_id} {n} record{'s' if n != 1 else ''}")
         return 0
     env = fk.envelope_stream(src, value_decoder=decoder)
@@ -727,7 +727,7 @@ def resolve_start_offset(resume: bool, start_offset: int | None, topic: str, adm
     if admin is None:
         raise SystemExit(
             "--resume needs the destination topic's head offset: provide "
-            "--start-offset or run with a reachable broker + Kafka client library"
+            "--start-offset or run with a reachable broker"
         )
     return admin.head_offset(topic)
 
@@ -774,7 +774,7 @@ def cmd_to_kafka(args) -> int:
         )
         if transport == "wire":
             # dependency-free bounded produce (kafka_wire): no JVM
-            # spark-sql-kafka jar or kafka-python needed
+            # spark-sql-kafka jar needed
             from .kafka_wire import wire_produce_df
 
             wire_produce_df(out, args.brokers, args.topic,

@@ -11,11 +11,13 @@ Reference semantics:
   - ``Producer.HeadOffset`` (fifo/producer.go:44-46): the topic's max
     end offset — the resume point for To.Sync (fifo/to.go:31-33).
 
-The broker boundary is the ``TopicAdmin`` interface.  ``FakeTopicAdmin``
-is the in-process double used by tests and local demos (this container
-ships no Kafka client library); ``KafkaTopicAdmin`` adapts kafka-python
-when it is importable.  Everything above the interface — CLI wiring,
-resume-offset resolution, ensure-topics — is exercised broker-free.
+The broker boundary is the ``TopicAdmin`` interface.  ``WireTopicAdmin``
+is the one real implementation: it speaks the public Kafka protocol
+through kafka_wire.KafkaWireClient, with the kafka.json TLS/SASL
+settings, so it needs no client library.  ``FakeTopicAdmin`` is the
+in-process double used by tests and local demos.  Everything above the
+interface — CLI wiring, resume-offset resolution, ensure-topics — is
+exercised broker-free.
 """
 
 from __future__ import annotations
@@ -122,69 +124,11 @@ class FakeTopicAdmin(TopicAdmin):
         return list(range(self.topics[topic]["partitions"]))
 
 
-class KafkaTopicAdmin(TopicAdmin):
-    """kafka-python-backed implementation, constructed lazily so the
-    dependency stays optional (the test container has no Kafka client
-    library — import failure surfaces as a clear TopicAdminError)."""
-
-    def __init__(self, brokers: str):
-        try:
-            from kafka import KafkaAdminClient, KafkaConsumer  # noqa: PLC0415
-            from kafka.admin import NewTopic  # noqa: PLC0415
-            from kafka.errors import TopicAlreadyExistsError  # noqa: PLC0415
-        except ImportError as e:  # pragma: no cover - env without kafka lib
-            raise TopicAdminError(
-                "no Kafka client library available (pip install kafka-python)"
-            ) from e
-        self._admin = KafkaAdminClient(bootstrap_servers=brokers)
-        self._consumer_cls = KafkaConsumer
-        self._new_topic = NewTopic
-        self._exists_err = TopicAlreadyExistsError
-        self._brokers = brokers
-
-    def create_topic(self, topic, partitions=1, replication=1, configs=None):
-        try:
-            self._admin.create_topics(
-                [
-                    self._new_topic(
-                        name=topic,
-                        num_partitions=partitions,
-                        replication_factor=replication,
-                        topic_configs=configs or {},
-                    )
-                ]
-            )
-        except self._exists_err:
-            raise TopicExists(topic) from None
-        except Exception as e:  # noqa: BLE001
-            raise TopicAdminError(f"creating topic {topic}: {e}") from e
-
-    def watermarks(self, topic):
-        consumer = self._consumer_cls(bootstrap_servers=self._brokers)
-        try:
-            from kafka import TopicPartition  # noqa: PLC0415
-
-            parts = consumer.partitions_for_topic(topic) or {0}
-            tps = [TopicPartition(topic, p) for p in parts]
-            starts = consumer.beginning_offsets(tps)
-            ends = consumer.end_offsets(tps)
-            return min(starts.values()), max(ends.values())
-        finally:
-            consumer.close()
-
-    def partitions(self, topic):
-        consumer = self._consumer_cls(bootstrap_servers=self._brokers)
-        try:
-            return sorted(consumer.partitions_for_topic(topic) or {0})
-        finally:
-            consumer.close()
-
-
 class WireTopicAdmin(TopicAdmin):
     """Broker admin over the dependency-free wire client
-    (kafka_wire.KafkaWireClient) — the fallback when kafka-python is
-    absent, and the adapter the stub-broker tests drive end-to-end
-    over a real socket."""
+    (kafka_wire.KafkaWireClient) — what ``open_admin`` returns, and the
+    adapter the stub-broker tests drive end-to-end over a real
+    socket."""
 
     def __init__(self, brokers: str, security: dict | None = None):
         from .kafka_wire import KafkaWireClient  # noqa: PLC0415
@@ -234,20 +178,15 @@ class WireTopicAdmin(TopicAdmin):
 
 
 def open_admin(brokers: str | None) -> TopicAdmin | None:
-    """CLI helper: a real admin when brokers are given, else None
-    (callers degrade like the reference does when its flags are 0).
-    kafka-python when importable; otherwise the dependency-free wire
-    adapter, probed with one ApiVersions round trip so an unreachable
-    broker still degrades to None instead of failing later."""
+    """CLI helper: a ``WireTopicAdmin`` when brokers are given, else
+    None (callers degrade like the reference does when its flags are
+    0).  Connects with the kafka.json security settings when a
+    kafka.json exists, and probes with one ApiVersions round trip so an
+    unreachable broker degrades to None instead of failing later
+    (callers that REQUIRE an admin, like resolve_start_offset
+    --resume, raise their own clear error)."""
     if not brokers:
         return None
-    try:
-        return KafkaTopicAdmin(brokers)
-    except Exception:  # noqa: BLE001 - missing lib, unreachable broker,
-        # client-library constructor errors (e.g. NoBrokersAvailable):
-        # open_admin is best-effort; callers that REQUIRE an admin
-        # (resolve_start_offset --resume) raise their own clear error
-        pass
     try:
         from .config import ConfigMissing, kafka_config, wire_security  # noqa: PLC0415
 

@@ -2,13 +2,13 @@
 https://kafka.apache.org/protocol).
 
 Why this exists: the Kafka-facing legs (A1 consume, A5 produce, A23
-admin — fifo/consumer.go, fifo/producer.go, fifo/admin.go) adapt
-kafka-python / Spark's JVM Kafka source, neither of which is available
-in every deployment (nor in this test container).  This module speaks
-the broker's actual TCP protocol directly, so the admin/produce/consume
-seams can run end-to-end against ANY broker — including the in-process
-stub broker (kafka_stub.StubBroker) used by the tests, which implements
-the same public wire format.
+admin — fifo/consumer.go, fifo/producer.go, fifo/admin.go) otherwise
+need Spark's JVM Kafka source, whose spark-sql-kafka jar is not on
+every classpath, and the admin leg has no JVM path at all.  This module
+speaks the broker's actual TCP protocol directly, so the admin/produce/
+consume seams can run end-to-end against ANY broker — including the
+in-process stub broker (kafka_stub.StubBroker) used by the tests, which
+implements the same public wire format.
 
 Supported API versions — non-"flexible" (pre-KIP-482) encodings, the
 simplest stable wire shapes, NEGOTIATED per broker via ApiVersions:
@@ -376,13 +376,17 @@ def crc32c_many(buffers: list[bytes]) -> list[int]:
     pipelined produce (thousands of equal-sized RecordBatches).
     Bit-identical to :func:`crc32c` (same tables, same fold; ragged
     tails finish on the scalar loop).  Falls back to scalar crc32c
-    without numpy or for short lists."""
+    without numpy or for fewer than 64 buffers: each lockstep step
+    costs ~20 numpy calls whatever the width, so on 200-record batches
+    (20-1000-byte records alike) the lockstep was 1.65x slower than
+    scalar at 32 buffers, broke even at ~53 and took 0.86x the scalar
+    time at 64 (4-core x86 VM)."""
     try:
         import numpy as np  # noqa: PLC0415
     except ImportError:  # pragma: no cover
         return [crc32c(b) for b in buffers]
     n_buf = len(buffers)
-    if n_buf < 32:
+    if n_buf < 64:
         return [crc32c(b) for b in buffers]
     tn = _CRC32C_NP
     if tn is None:
@@ -1408,19 +1412,21 @@ class KafkaWireClient:
         of the same RecordBatch payload.  ``compression`` (all four
         codecs; stdlib fallbacks) applies to either generation.
 
-        ``premade_batch``: a pre-encoded RecordBatch v2 (from
-        :func:`encode_record_batches` — the bulk-CRC produce path);
-        requires a negotiated version >= 3 and makes ``messages``/
-        ``timestamp_ms``/``compression`` moot."""
+        ``premade_batch``: a record set already encoded for the
+        negotiated version — RecordBatch v2 at v3+, a magic-1
+        MessageSet below (wire_produce_df's bulk encode) — which makes
+        ``messages``/``timestamp_ms``/``compression`` moot."""
         version = (
             self._negotiate(API_PRODUCE, self._PRODUCE_VERSIONS)
             if api_version is None
             else api_version
         )
         if premade_batch is not None:
-            if version < 3:
+            # magic byte: offset 16 in both a RecordBatch v2 and a
+            # magic-1 MessageSet
+            if premade_batch[16:17] != bytes([2 if version >= 3 else 1]):
                 raise KafkaWireError(
-                    "premade_batch needs Produce >= v3 (RecordBatch v2)"
+                    f"premade_batch generation does not match Produce v{version}"
                 )
             ms = premade_batch
         elif version >= 3:
@@ -1698,6 +1704,15 @@ def wire_read_topic(
     return spark.createDataFrame(rows, schema)
 
 
+#: produce batches encoded per call in wire_produce_df.  crc32c_many's
+#: numpy lockstep pays ~20 array ops per 8-byte step, so its gain grows
+#: with the number of buffers: over 1000 batches of 200 ~150-byte
+#: records, groups of 64 encoded no faster than the scalar loop and
+#: groups of 1024 ~7x faster (4-core x86 VM).  The group also bounds
+#: the Python rows alive at once (~200k at the default batch size).
+_ENCODE_GROUP = 1024
+
+
 def wire_produce_df(
     df,
     brokers: str,
@@ -1713,103 +1728,74 @@ def wire_produce_df(
     batches of ``batch_size`` (the reference's to-kafka produce loop
     batches 200, fifo/to.go:63-81).  Returns the record count.
 
-    ``pipelined=True`` streams every batch with acks=0 (the protocol's
+    One loop: the frame is collected once as an Arrow table (strings
+    are UTF-8 encoded JVM-side, so rows arrive as columnar binary
+    instead of pickled Row objects) and walked in slices of
+    ``batch_size``.  Each group of up to ``_ENCODE_GROUP`` slices is
+    encoded together — RecordBatch v2 via :func:`encode_record_batches`
+    (one numpy CRC-32C pass across the group) when the broker
+    negotiates Produce >= v3, one magic-1 MessageSet per slice below
+    that — and sent batch by batch.  Python objects exist for one group
+    at a time; the Arrow table holds the payload once.
+
+    ``pipelined=True`` sends every batch with acks=0 (the protocol's
     fire-and-forget: the broker sends no response, so batches pipeline
     through the TCP window instead of paying a round trip each) and
     then BARRIERS: one ListOffsets probe verifies the partition's high
     watermark advanced by exactly the produced count, raising
     KafkaWireError otherwise.  Same failure semantics as the
-    synchronous mode — a mid-stream crash leaves earlier batches
-    appended either way, and callers already handle that with produced-
-    offset watermarks (continuous_sink's sidecar) — but ~an order of
-    magnitude fewer round trips.  Assumes this producer is the
-    partition's only writer during the call, which is the sync loop's
-    ordering assumption anyway.
+    synchronous mode (acks=-1 per batch) — a mid-stream crash leaves
+    earlier batches appended either way, and callers already handle
+    that with produced-offset watermarks (continuous_sink's sidecar) —
+    but ~an order of magnitude fewer round trips.  Assumes this
+    producer is the partition's only writer during the call, which is
+    the sync loop's ordering assumption anyway.
 
     Driver-side by design: the bounded to-kafka sync is a tail read of
     the pool (ordered_batch), not a corpus scan.
     """
-
-    def _b(v) -> bytes | None:
-        if v is None:
-            return None
-        return v.encode("utf-8") if isinstance(v, str) else bytes(v)
-
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     key_col = (
         F.col("key") if "key" in df.columns
         else F.lit(None).cast("binary").alias("key")
     )
-    # r13: collect as ONE Arrow table — string->utf8-bytes conversion
-    # happens JVM-side (encode()), and the rows arrive as columnar
-    # binary arrays instead of 1 pickled Row object per record (the
-    # pickle/Row machinery was ~30% of the egress profile).  Order is
-    # preserved (toArrow == collect order).  Memory matches this
-    # function's contract — bounded driver-side batches (micro-batch
-    # sinks, tail reads), never a corpus scan; the toLocalIterator
-    # fallback covers sessions without Arrow support.
     proj = df.select(key_col.alias("key"), F.col("value"))
-    proj = proj.select(
+    tbl = proj.select(
         *[
             F.encode(F.col(f.name), "UTF-8").alias(f.name)
             if f.dataType.simpleString() == "string"
             else F.col(f.name)
             for f in proj.schema.fields
         ]
-    )
-    rows_iter = None
-    try:
-        tbl = proj.toArrow()
-        rows_iter = zip(
-            tbl.column("key").to_pylist(), tbl.column("value").to_pylist()
-        )
-    except Exception:  # noqa: BLE001 - no Arrow path: pickled rows
-        pass
+    ).toArrow()
     acks = 0 if pipelined else -1
+    group = batch_size * _ENCODE_GROUP
     n = 0
     with KafkaWireClient(brokers, **(security or {})) as c:
         start_hw = c.list_offset(topic, partition, LATEST) if pipelined else 0
-        if rows_iter is None:
-            # toLocalIterator: one partition at a time on the driver
-            rows_iter = (
-                (_b(row["key"]), _b(row["value"]))
-                for row in df.select(key_col, "value").toLocalIterator()
-            )
         ver = c._negotiate(API_PRODUCE, c._PRODUCE_VERSIONS)
-        if pipelined and ver >= 3:
-            # bulk path (r13): batch boundaries, wire bytes and failure
-            # semantics identical to the per-batch loop below, but all
-            # batches' CRC-32C runs in one numpy lockstep pass — the
-            # dominant remaining producer-side cost once the record
-            # loop is tight.
-            rows = list(rows_iter)
+        for g in range(0, tbl.num_rows, group):
+            part = tbl.slice(g, group)
+            rows = list(
+                zip(part.column("key").to_pylist(),
+                    part.column("value").to_pylist())
+            )
             batches = [
                 rows[i : i + batch_size]
                 for i in range(0, len(rows), batch_size)
             ]
-            for rb, nb in zip(
-                encode_record_batches(batches, compression=compression),
-                (len(b) for b in batches),
-            ):
-                c.produce(
-                    topic, partition, [], acks=0, api_version=ver,
-                    premade_batch=rb,
-                )
-                n += nb
-        else:
-            buf: list[tuple[bytes | None, bytes | None]] = []
-            for kv in rows_iter:
-                buf.append(kv)
-                if len(buf) >= batch_size:
-                    c.produce(topic, partition, buf,
-                              acks=acks, compression=compression)
-                    n += len(buf)
-                    buf = []
-            if buf:
-                c.produce(topic, partition, buf,
-                          acks=acks, compression=compression)
-                n += len(buf)
+            if ver >= 3:
+                sets = encode_record_batches(batches, compression=compression)
+            else:
+                sets = [
+                    encode_message_set(b, compression=compression)
+                    for b in batches
+                ]
+            for ms, b in zip(sets, batches):
+                c.produce(topic, partition, [], acks=acks, api_version=ver,
+                          premade_batch=ms)
+                n += len(b)
         if pipelined:
             end_hw = c.list_offset(topic, partition, LATEST)
             if end_hw - start_hw != n:

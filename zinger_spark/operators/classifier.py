@@ -95,7 +95,12 @@ def _train_local(
         return None  # distributed NULL semantics differ; don't replay
     y = pdf[label_col].to_numpy(dtype="int64")
     X = pdf[feature_cols].to_numpy(dtype="int64")
-    mx = [int(np.abs(X[:, j]).max()) if n else 0 for j in range(d)]
+    # max |x_j| from the exact Python ints of the column's min and max:
+    # np.abs wraps int64 min (-2^63) to itself, a negative "max"
+    mx = [
+        max(-int(X[:, j].min()), int(X[:, j].max())) if n else 0
+        for j in range(d)
+    ]
     lim = 1 << 62
     if any(n * m >= lim for m in mx):
         return None  # gradient sums could overflow int64

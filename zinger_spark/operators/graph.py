@@ -307,9 +307,13 @@ def _pagerank_local_rows(
     n_all = len(uniques)
     outdeg = np.bincount(s_codes, minlength=n_all).astype("int64")
     has_out = outdeg > 0
-    # exact overflow bound (Python ints): total rank mass is bounded by
-    # n*scale*sum(0.85^t) < 7*n*scale, and the widest intermediate is
-    # rank*damping_pct — guard it against int64 before trusting numpy
+    # exact overflow bound (Python ints).  Total rank mass cannot grow:
+    # M_0 = n*scale, and M_{t+1} <= n*base + (d/100)*M_t <= n*scale
+    # because base <= scale*(100-d)/100 (floor division and dropped
+    # dangling mass only shrink it) — for any damping_pct in 0..100.
+    # Every rank is non-negative, so the widest intermediate,
+    # rank*damping_pct, is at most n*scale*100.  The factor 7 is spare
+    # headroom, not needed by this bound.
     if 7 * n_all * int(scale) * 100 >= 1 << 63:
         return None
     rank = np.full(n_all, int(scale), dtype="int64")

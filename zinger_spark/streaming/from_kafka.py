@@ -218,20 +218,35 @@ def commit_batch(
         last = txn.get(app_id)
         if last is not None and batch_id <= last:
             return False  # crash-replayed micro-batch: already in the pool
-        if dedup_values:
-            # inside the lock: the anti-join must see every committed
-            # batch, including one racing in from another writer
-            batch = _dedup_against_pool(pool, batch)
-            if batch.isEmpty():
-                txn[app_id] = batch_id
-                pool.write_sidecar(INGEST_TXN_SIDECAR, txn)
-                return False
-        pool.load_batch(batch)
-        if track_distinct:
-            _merge_hll_sidecar(pool, batch, track_distinct)
+        commit_id, _ = load_under_lock(pool, batch, dedup_values, track_distinct)
         txn[app_id] = batch_id
         pool.write_sidecar(INGEST_TXN_SIDECAR, txn)
-    return True
+    return commit_id is not None
+
+
+def load_under_lock(
+    pool: Pool,
+    batch: DataFrame,
+    dedup_values: bool = False,
+    track_distinct: str | None = None,
+) -> tuple[str | None, DataFrame]:
+    """The locked section of an ingest commit, shared by
+    ``commit_batch`` and the CLI's one-shot wire ingest: optional
+    dedup against the pool, ``load_batch``, optional HLL sidecar merge.
+    The caller holds ``pool.writer_lock()`` — the anti-join must see
+    every committed batch, including one racing in from another
+    writer.  The deduplicated batch is materialised once, so the
+    anti-join over the pool runs once rather than per action, and the
+    rows loaded are the rows sketched.  Returns (commit id, the batch
+    as loaded); the commit id is None when dedup left nothing to load."""
+    if dedup_values:
+        batch = _dedup_against_pool(pool, batch).localCheckpoint(eager=True)
+        if batch.isEmpty():
+            return None, batch
+    commit_id = pool.load_batch(batch)
+    if track_distinct:
+        _merge_hll_sidecar(pool, batch, track_distinct)
+    return commit_id, batch
 
 
 HLL_SIDECAR_P = 12

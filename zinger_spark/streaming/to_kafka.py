@@ -102,38 +102,6 @@ def sync_batches(
         offset = stats["mx"] + 1
 
 
-def sync_once(
-    pool: Pool,
-    topic: str,
-    start_offset: int,
-    produce: Callable[[DataFrame], None],
-    transform=None,
-) -> int:
-    """Single-pass egress: ONE plan over the pool (filter >= start,
-    sort by offset) handed to ``produce`` whole, instead of the
-    reference's 200-row loop that re-scans the pool per batch
-    (fifo/to.go:29-53). The Spark-native choice for bulk catch-up: the
-    scan happens once, ordering is preserved by a single-partition
-    sort (the reference's topics are single-partition by contract,
-    fifo/consumer.go:59-63). Use sync_batches for reference-exact
-    batch semantics, continuous_sink for ongoing egress."""
-    from pyspark.sql import Observation  # noqa: PLC0415
-
-    df = (
-        pool.df()
-        .filter((F.col("kafka.topic") == topic) & (F.col("kafka.offset") >= start_offset))
-        .repartition(1)
-        .sortWithinPartitions("kafka.offset")
-    )
-    if transform is not None:
-        df = transform(df)
-    # count rides on the produce action itself (same single-execution
-    # discipline as EtlPipeline.run)
-    obs = Observation()
-    produce(df.observe(obs, F.count(F.lit(1)).alias("rows")))
-    return int(obs.get["rows"])
-
-
 # Broker-free produce target for tests/demos ONLY: rows collected per
 # query_name, read back with ``memory_sink_rows``.  Grows for the
 # process lifetime by design (a test inspects what was "produced"
