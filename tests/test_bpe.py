@@ -124,6 +124,37 @@ def test_learn_random_corpus_and_partitioning_invariance(
     assert got2 == want
 
 
+def test_learn_without_checkpoint_still_takes_driver_path(
+    spark, monkeypatch
+):
+    """checkpoint=False changes only the distributed loop's lineage
+    cuts: under the threshold the merge loop still replays on the
+    driver, with the same result as the distributed loop."""
+    import zinger_spark.operators.bpe as bpe
+
+    calls = []
+    real = bpe._learn_local
+
+    def spy(v, merges):
+        calls.append(merges)
+        return real(v, merges)
+
+    monkeypatch.setattr(bpe, "_learn_local", spy)
+    docs = spark.createDataFrame(
+        [("abab abab cdcd abcd dd a",)], ["text"]
+    )
+    got, gvocab = bpe_learn(word_frequencies(docs), merges=5, checkpoint=False)
+    assert calls == [5]
+    want, wvocab = bpe_learn(
+        word_frequencies(docs), merges=5, local_threshold=0
+    )
+    assert calls == [5]  # local_threshold=0: distributed loop
+    assert got == want
+    assert sorted(map(tuple, gvocab.collect())) == sorted(
+        map(tuple, wvocab.collect())
+    )
+
+
 def test_pair_counts_weighted(spark):
     vocab = spark.createDataFrame(
         [("a b", 3), ("a b", 0), ("b c", 2), ("x", 9)], ["s", "n"]

@@ -414,28 +414,6 @@ def test_info_files_zone_map(spark, tmp_path, capsys):
     assert all(l["files"] >= 1 and l["bytes"] > 0 for l in lines)
 
 
-def test_info_files_partitioned_pool(spark, tmp_path, capsys):
-    """--files must resolve the topic-major layout: data lives at
-    <pool>/_topic=T/commit-N, so a flat <pool>/commit-N glob would
-    report files=0/bytes=0 for every commit."""
-    import json as _json
-
-    from zinger_spark.cli import main as cli_main
-    from zinger_spark.sources.pool import Pool
-    from tests.test_pool import _schema, env_rows
-
-    pool = Pool.create(spark, str(tmp_path / "pp"), partition_by_topic=True)
-    pool.load_batch(spark.createDataFrame(env_rows("T", [0, 1, 2]), _schema()))
-    pool.load_batch(spark.createDataFrame(env_rows("U", [3, 4]), _schema()))
-    rc = cli_main(["info", "--pool", "pp", "--lake", str(tmp_path), "--files"])
-    assert rc == 0
-    lines = [_json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
-    assert len(lines) == 2
-    assert all(l["files"] >= 1 and l["bytes"] > 0 for l in lines)
-    ranges = sorted((l["offset_min"], l["offset_max"]) for l in lines)
-    assert ranges == [(0, 2), (3, 4)]
-
-
 def test_cli_train_quality_and_bpe_artifacts(spark, tmp_path):
     """train-quality / train-bpe produce loadable artifacts that
     rebuild the exact scoring expression / tokenizer."""

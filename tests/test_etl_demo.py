@@ -496,11 +496,20 @@ def test_concurrent_etl_drivers_serialize(spark, pools):
     assert staging_flat(pools["Staging"]) == GOLDENS[0]
 
 
-def test_etl_run_stream_processes_batches_continuously(spark, pools, tmp_path):
+@pytest.mark.parametrize("table_format", ["commits", "txlog"])
+def test_etl_run_stream_processes_batches_continuously(
+    spark, tmp_path, table_format
+):
     """Continuous ETL: the commit-arrival trigger stream drives
     incremental run()s; loading later demo batches while the stream is
     live must converge the staging pool to the same golden as the
-    batch driver, with the idempotent no-op runs in between."""
+    batch driver, with the idempotent no-op runs in between.  The
+    trigger glob comes from Pool.data_glob, so txlog pools (data under
+    data/commit-*) wake the stream too."""
+    pools = {
+        name: Pool.create(spark, str(tmp_path / name), table_format=table_format)
+        for name in ("Raw", "Staging")
+    }
     transform = make_transform()
     pipeline = EtlPipeline(spark, transform, lambda name: pools[name])
     counts = []
@@ -577,35 +586,6 @@ def test_cli_etl_cursor_lag_prints_metric(spark, pools, tmp_path, capsys, monkey
     out = capsys.readouterr().out
     assert rc == 0
     assert "Invoices\t1" in out
-
-
-def test_etl_demo_on_partitioned_pools(spark, tmp_path):
-    """The 100-TB pool layout (hive-partitioned by kafka.topic) must
-    run the same ETL to the same goldens: the planner's topic-scoped
-    reads go through Pool.df(topic=...), which prunes on the _topic
-    partition column before it is dropped."""
-    pools = {
-        "Raw": Pool.create(spark, str(tmp_path / "Raw"), partition_by_topic=True),
-        "Staging": Pool.create(
-            spark, str(tmp_path / "Staging"), partition_by_topic=True
-        ),
-    }
-    transform = make_transform()
-    pipeline = EtlPipeline(spark, transform, lambda name: pools[name])
-    for i, (invoices, statuses) in enumerate(BATCHES):
-        if invoices:
-            pools["Raw"].load_batch(
-                spark.createDataFrame(invoices, envelope_schema(AFTER_INV))
-            )
-        if statuses:
-            pools["Raw"].load_batch(
-                spark.createDataFrame(statuses, envelope_schema(AFTER_IS))
-            )
-        n = pipeline.run()
-        assert n == ETLD[i], f"batch {i + 1}: ETL'd {n}, want {ETLD[i]}"
-        assert staging_flat(pools["Staging"]) == GOLDENS[i], f"batch {i + 1}"
-    # idempotent re-run on the partitioned layout too
-    assert pipeline.run() == 0
 
 
 def test_etl_demo_on_txlog_pools(spark, tmp_path):

@@ -25,10 +25,7 @@ POOL = "mem://bucket/pool"
 
 
 def _make_pool(fs, path=POOL):
-    fs.write_json_atomic(
-        f"{path}/_pool.json", {"key": "kafka.offset", "order": "asc"}
-    )
-    return Pool(None, path, storage=fs)
+    return Pool.create(None, path, storage=fs)
 
 
 def test_fake_store_has_no_posix_semantics():
@@ -72,7 +69,7 @@ def test_writer_lock_mutual_exclusion_across_instances():
     against one shared object store; a non-atomic critical section
     detects any double-holder."""
     fs = MemoryObjectStorage()
-    _make_pool(fs)  # writes _pool.json
+    _make_pool(fs)
     state = {"holders": 0, "entries": 0}
     failures = []
 
@@ -138,7 +135,6 @@ def test_manifest_protocol_on_object_store():
     the commit-visibility truth never relies on rename atomicity."""
     fs = MemoryObjectStorage()
     pool = _make_pool(fs)
-    pool._write_manifest([])
     assert pool._commit_names() == []
     # simulate a published commit: data keys land under the final
     # prefix (object stores skip the tmp+rename dance), then the

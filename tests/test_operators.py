@@ -159,6 +159,24 @@ def test_ngram_jaccard_max_df_caps_stop_phrase(spark):
     assert uncapped.count() == 45
 
 
+@pytest.mark.parametrize("max_pb", ["128m", "128mb", "134217728", "1g"])
+def test_could_be_narrow_reads_size_suffixes(spark, max_pb):
+    """maxPartitionBytes set with a size suffix must still size the
+    narrow-input pre-filter: a plan estimated at 8 GB is never narrower
+    than 2 partitions, and a 2-row frame always may be."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, max_pb)
+    try:
+        assert zdedup._could_be_narrow(spark.range(10**9), want=2) is False
+        assert zdedup._could_be_narrow(spark.range(2), want=2) is True
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
 def test_simhash_similar_docs_close(spark):
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),

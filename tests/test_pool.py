@@ -1,5 +1,7 @@
-"""Pool layer tests: atomic commits, schema merge, offsets, and the
-partitioned (100 TB) layout incl. partition pruning."""
+"""Pool layer tests for the commits format: atomic commits, schema
+merge, offsets, the manifest as the one record of live commits,
+compaction, vacuum, and refusal of the layouts the pool no longer
+reads (the txlog format is covered in test_pool_txlog.py)."""
 
 from __future__ import annotations
 
@@ -39,56 +41,12 @@ def test_atomic_commit_and_merge(spark, tmp_path):
     assert pool.next_producer_offsets() == {"T": 3}
 
 
-def test_partitioned_layout_prunes(spark, tmp_path):
-    pool = Pool.create(spark, str(tmp_path / "pp"), partition_by_topic=True)
-    pool.load_batch(
-        spark.createDataFrame(env_rows("A", [0, 1]) + env_rows("B", [0]), _schema())
-    )
-    df = pool.df()
-    # same logical schema as unpartitioned pools
-    assert set(df.columns) == {"kafka", "key", "value", "_type"}
-    assert df.count() == 3
-    # topic filter prunes to one hive partition
-    plan = (
-        df.filter(F.col("kafka.topic") == "A")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert df.filter(F.col("kafka.topic") == "A").count() == 2
-    # the scan's file listing is restricted to the _topic=A directory
-    assert "_topic=B" not in plan
-
-
-def test_partitioned_pool_prunes_by_topic(spark, tmp_path):
-    """df(topic=...) applies the restriction to the PARTITION column
-    (_topic) before dropping it — a filter on the nested kafka.topic
-    alone cannot reach partition pruning. The scan must carry a
-    PartitionFilters entry on _topic."""
-    pool = Pool.create(spark, str(tmp_path / "ppp"), partition_by_topic=True)
-    pool.load_batch(
-        spark.createDataFrame(env_rows("A", [0, 1]) + env_rows("B", [0, 1, 2]), _schema())
-    )
-    scoped = pool.df(topic="A")
-    assert scoped.count() == 2
-    # topic pruning is PATH-LEVEL (stronger than a partition filter):
-    # the scan's file listing contains only the topic's directories
-    files = scoped.inputFiles()
-    assert files and all("_topic=A" in f for f in files)
-    assert not any("_topic=B" in f for f in files)
-    # read_batch rides the same pruned path
-    out = [r["kafka"]["offset"] for r in pool.read_batch("B", 1, 5).collect()]
-    assert out == [1, 2]
-    # unpartitioned pools accept the same call (plain filter)
-    flat = Pool.create(spark, str(tmp_path / "flat"))
-    flat.load_batch(spark.createDataFrame(env_rows("A", [0]) + env_rows("B", [7]), _schema()))
-    assert [r["kafka"]["offset"] for r in flat.df(topic="B").collect()] == [7]
-
-
-def test_partitioned_full_read_single_scan(spark, tmp_path):
-    """Topic-major layout payoff (judge r5 #3): a partitioned pool's
-    FULL read is ONE FileScan regardless of commit count — not
-    O(commits) fused scan nodes.  Also covers as-of subsets and
-    compaction keeping the single-scan property."""
-    pool = Pool.create(spark, str(tmp_path / "ssp"), partition_by_topic=True)
+def test_full_read_single_scan(spark, tmp_path):
+    """Every read of a commits pool — full, as-of subset, topic-scoped
+    and after compaction — is ONE FileScan over the live commit dirs,
+    regardless of commit count, and vacuum reclaims the merged-away
+    commits."""
+    pool = Pool.create(spark, str(tmp_path / "ssp"))
     mid = None
     for i in range(6):
         cid = pool.load_batch(
@@ -107,11 +65,11 @@ def test_partitioned_full_read_single_scan(spark, tmp_path):
     asof = pool.df(as_of=mid)
     assert asof._jdf.queryExecution().executedPlan().toString().count("Scan parquet") == 1
     assert asof.count() == 6
-    # topic-scoped: single scan, path-level pruned
+    # topic-scoped: single scan, filtered to the topic
     scoped = pool.df(topic="A")
     assert scoped._jdf.queryExecution().executedPlan().toString().count("Scan parquet") == 1
     assert sorted(r["kafka"]["offset"] for r in scoped.collect()) == [0, 2, 4, 6, 8, 10]
-    # compaction merges the per-topic commit instances and stays 1-scan
+    # compaction merges the commits and stays 1-scan
     assert pool.compact() == 6
     df2 = pool.df()
     assert df2._jdf.queryExecution().executedPlan().toString().count("Scan parquet") == 1
@@ -129,6 +87,42 @@ def test_empty_pool_and_bad_key(spark, tmp_path):
         pool.df()
     with pytest.raises(PoolError, match="pool order must be asc"):
         Pool.create(spark, str(tmp_path / "bad"), order="desc")
+
+
+def test_partitioned_layout_refused(spark, tmp_path):
+    """A _pool.json that names the removed hive-partitioned layout is
+    refused on open, never read as an empty pool."""
+    import json
+
+    path = tmp_path / "legacy"
+    pool = Pool.create(spark, str(path))
+    pool.load_batch(spark.createDataFrame(env_rows("A", [0]), _schema()))
+    meta = json.loads((path / "_pool.json").read_text())
+    (path / "_pool.json").write_text(json.dumps({**meta, "partitioned": True}))
+    with pytest.raises(PoolError, match="partitioned"):
+        Pool(spark, str(path))
+    # "partitioned": false, as flat pools used to record it, still opens
+    (path / "_pool.json").write_text(json.dumps({**meta, "partitioned": False}))
+    assert Pool(spark, str(path)).df().count() == 1
+
+
+def test_missing_manifest_refused(spark, tmp_path):
+    """A commits pool without _manifest.json is refused on open: the
+    manifest is the only record of which commit dirs are live, so
+    listing the dirs instead could publish crashed or merged-away
+    commits."""
+    import os
+
+    pool = Pool.create(spark, str(tmp_path / "nm"))
+    pool.load_batch(spark.createDataFrame(env_rows("T", [0, 1]), _schema()))
+    os.remove(os.path.join(pool.path, "_manifest.json"))
+    with pytest.raises(PoolError, match="_manifest.json"):
+        Pool(spark, pool.path)
+    # a handle opened before the manifest vanished refuses too
+    with pytest.raises(PoolError, match="_manifest.json"):
+        pool.df()
+    with pytest.raises(PoolError, match="_manifest.json"):
+        pool.is_empty()
 
 
 def test_read_batch_ordered(spark, tmp_path):
@@ -219,7 +213,6 @@ def test_writer_lock_prevents_manifest_lost_update(spark, tmp_path):
     from zinger_spark.sources.pool import Pool
 
     pool = Pool.create(spark, str(tmp_path / "race"))
-    pool._write_manifest([])  # opt in to manifest mode (compact does this)
     df = spark.range(3).selectExpr(
         "named_struct('topic', 'T', 'partition', 0L, 'offset', id) AS kafka",
         "'data' AS _type",
@@ -394,20 +387,6 @@ def test_direct_commit_unpublished_invisible_and_vacuumed(spark, tmp_path):
     assert pool.df().count() == 1
 
 
-def test_partitioned_pool_keeps_topic_major_layout_on_object_store(spark, tmp_path):
-    """Partitioned pools keep tmp+rename even on rename_is_copy
-    backends: the per-topic move is the price of the topic-major
-    layout that makes topic reads O(topic's commits)."""
-    fs = _ObjectStoreLikePosix()
-    pool = Pool.create(
-        spark, str(tmp_path / "p"), partition_by_topic=True, storage=fs
-    )
-    pool.load_batch(spark.createDataFrame(env_rows("A", [0]), _schema()))
-    top = set(fs.listdir(str(tmp_path / "p")))
-    assert "_topic=A" in top
-    assert pool.df(topic="A").count() == 1
-
-
 def test_size_tiered_compact_merges_only_small_commits(spark, tmp_path):
     """compact(small_bytes): small commits merge into one, big commits
     stay untouched (never rewritten), data and offsets are preserved,
@@ -436,21 +415,6 @@ def test_size_tiered_compact_merges_only_small_commits(spark, tmp_path):
     assert pool.compact(small_bytes=big_size) == 0
     # vacuum reclaims the merged-away dirs after grace
     assert pool.vacuum(grace_seconds=0.0) == 3
-
-
-def test_size_tiered_compact_partitioned(spark, tmp_path):
-    pool = Pool.create(spark, str(tmp_path / "p"), partition_by_topic=True)
-    pool.load_batch(
-        spark.createDataFrame(env_rows("A", list(range(400))), _schema())
-    )
-    pool.load_batch(spark.createDataFrame(env_rows("A", [400]), _schema()))
-    pool.load_batch(spark.createDataFrame(env_rows("B", [0]), _schema()))
-    big = pool._commit_names()[0]
-    merged = pool.compact(small_bytes=pool._commit_size(big))
-    assert merged == 2
-    assert pool.df(topic="A").count() == 401
-    assert pool.df(topic="B").count() == 1
-    assert pool.next_producer_offsets() == {"A": 401, "B": 1}
 
 
 def test_as_of_below_compaction_floor_errors_loudly(spark, tmp_path):

@@ -170,16 +170,6 @@ def test_txlog_vacuum_reclaims_removed_and_dark_files(spark, tmp_path):
     assert sorted(r["kafka"]["offset"] for r in pool.df().collect()) == [0, 1, 2, 3]
 
 
-def test_txlog_rejects_partitioned_combination(spark, tmp_path):
-    with pytest.raises(PoolError, match="not supported"):
-        Pool.create(
-            spark,
-            str(tmp_path / "x"),
-            table_format="txlog",
-            partition_by_topic=True,
-        )
-
-
 def test_txlog_size_tiered_compact(spark, tmp_path):
     pool = _mk(spark, tmp_path)
     # one big file, two small ones

@@ -301,6 +301,33 @@ def test_pagerank_local_numpy_matches_dict_and_distributed(spark):
         assert sorted(got_np) == sorted(got_py) == want
 
 
+def test_pagerank_without_checkpoint_still_takes_driver_path(
+    spark, monkeypatch
+):
+    """checkpoint=False changes only the distributed loop's caching
+    and lineage cuts: under the threshold the graph still replays on
+    the driver, with the same ranks as the distributed loop."""
+    import zinger_spark.operators.graph as graph
+
+    calls = []
+    real = graph._pagerank_local_rows
+
+    def spy(*args, **kwargs):
+        calls.append(args[-1])  # n_edges
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(graph, "_pagerank_local_rows", spy)
+    pairs = [(f"n{i}", f"n{(i * 7 + 3) % 23}") for i in range(40)]
+    e = _edges(spark, pairs)
+    got = sorted(map(tuple, pagerank_fixed_point(e, 4, checkpoint=False).collect()))
+    assert calls == [40]
+    want = sorted(
+        map(tuple, pagerank_fixed_point(e, 4, local_threshold=0).collect())
+    )
+    assert calls == [40]  # local_threshold=0: distributed loop
+    assert got == want
+
+
 @settings(
     max_examples=4,
     deadline=None,

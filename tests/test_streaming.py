@@ -428,43 +428,6 @@ def test_to_kafka_streaming_replays_etl_demo(spark, tmp_path):
     ) == ["closed", "collections", "paid", "paid", "pending", "pending", "pending"]
 
 
-def test_continuous_sink_partitioned_pool(spark, tmp_path):
-    """continuous_sink over the 100-TB pool layout: the glob must reach
-    the _topic partition dirs, and a topic restriction prunes at the
-    path level (other topics' files are never listed)."""
-    pool = Pool.create(spark, str(tmp_path / "csp"), partition_by_topic=True)
-    env_schema = T.StructType.fromDDL(
-        "kafka struct<topic:string,partition:bigint,offset:bigint>, "
-        "key string, value struct<a:bigint>, _type string"
-    )
-    rows = [(("T", 0, i), None, (i,), "data") for i in range(3)]
-    rows += [(("OTHER", 0, i), None, (100 + i,), "data") for i in range(2)]
-    pool.load_batch(spark.createDataFrame(rows, env_schema))
-
-    def sink(df):
-        return tk.kafka_sink_projection(
-            df,
-            value_encoder=lambda d: cj.encode(
-                F.col("value"), T.StructType.fromDDL("a bigint")
-            ),
-        )
-
-    tk._MEMORY_SINKS.pop("to_kafka_part_test", None)
-    q = tk.continuous_sink(
-        spark,
-        pool,
-        env_schema,
-        str(tmp_path / "ckp"),
-        sink,
-        topic="T",
-        available_now=True,
-        query_name="to_kafka_part_test",
-    )
-    q.awaitTermination(120)
-    rows_out = tk.memory_sink_rows("to_kafka_part_test")
-    assert {json.loads(r["value"])["payload"]["a"] for r in rows_out} == {0, 1, 2}
-
-
 def test_continuous_sink_survives_compact(spark, tmp_path):
     """compact() rewrites every live row into a brand-new commit dir;
     the file-source checkpoint sees only new files, so without the

@@ -346,12 +346,14 @@ def main() -> int:
 
     # the registry form localCheckpoints per round (lineage cut), which
     # hides iteration internals from the final plan — audit one
-    # un-checkpointed round directly
+    # un-checkpointed round of the distributed loop directly
+    # (local_threshold=0: a small graph would replay on the driver)
     from zinger_spark.operators.graph import pagerank_fixed_point
     li = qs["tpch_q1"].__globals__["_t"](spark, sf, "lineitem")
     ed = li.select(F.col("l_suppkey").cast("string").alias("src"),
                    F.col("l_orderkey").cast("string").alias("dst"))
-    p = plan_of(pagerank_fixed_point(ed, iterations=1, checkpoint=False))
+    p = plan_of(pagerank_fixed_point(ed, iterations=1, checkpoint=False,
+                                     local_threshold=0))
     check("pagerank_trade_graph",
           "CartesianProduct" not in p and "partial_sum" in p,
           "per-iteration contributions partial-agg before the dst shuffle")

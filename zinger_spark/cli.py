@@ -496,17 +496,8 @@ def cmd_info(args) -> int:
 
             import pyarrow.parquet as _pq
 
-            # _commit_instances resolves the on-disk layout: one flat
-            # dir per commit, or one per _topic=T in partitioned pools
-            # (where <pool>/commit-N itself never exists and a bare
-            # glob would report files=0 for every commit)
-            for cname in pool._commit_names():
-                files = sorted(
-                    f
-                    for inst in pool._commit_instances(cname)
-                    for f in _glob.glob(f"{inst}/*.parquet")
-                    + _glob.glob(f"{inst}/*/*.parquet")
-                )
+            for cdir in pool._commit_dirs():
+                files = sorted(_glob.glob(f"{cdir}/*.parquet"))
                 total = sum(os.path.getsize(f) for f in files)
                 lo = hi = None
                 for f in files:
@@ -520,7 +511,7 @@ def cmd_info(args) -> int:
                                 lo = s.min if lo is None else min(lo, s.min)
                                 hi = s.max if hi is None else max(hi, s.max)
                 print(json.dumps({
-                    "commit": cname, "files": len(files),
+                    "commit": os.path.basename(cdir), "files": len(files),
                     "bytes": total, "offset_min": lo, "offset_max": hi,
                 }))
             return 0

@@ -338,19 +338,19 @@ class EtlPipeline:
         ingest (from_kafka.run_ingest) -> streaming ETL (here) ->
         streaming egress (to_kafka.continuous_sink).
 
+        The trigger glob (``Pool.data_glob``) sees a commit's files as
+        they land, which can be just before the commit is published
+        (manifest or log append), on both table formats.  A wake-up
+        that fires in that window runs a ``run()`` that does not see
+        the commit yet; the NEXT wake-up's ``run()`` picks it up.  So
+        the last commit before the input goes quiet can wait for the
+        next commit to arrive (or for a restart, or a batch ``run()``).
+
         ``on_batch(n)`` (optional) receives each run's ETL'd count.
         """
         # one glob per distinct input pool; the file source tracks new
-        # commit files under each (partitioned pools are topic-major,
-        # so their glob goes through the _topic dirs)
-        globs = sorted(
-            {
-                f"{pool.path}/_topic=*/commit-*"
-                if pool.meta.get("partitioned")
-                else f"{pool.path}/commit-*"
-                for pool in self.input_pools.values()
-            }
-        )
+        # commit files under each
+        globs = sorted({pool.data_glob() for pool in self.input_pools.values()})
         schema = None
         for route in self.transform.inputs:
             pool = self.input_pools[route.pool]

@@ -164,15 +164,16 @@ def bpe_learn(
     round-trips per merge round.  A natural-language vocabulary is
     Heaps-law bounded, but a pathological one (hashes, ids) exceeds the
     threshold and takes the distributed loop unchanged.
-    ``local_threshold=0`` disables the driver path."""
+    ``local_threshold=0`` disables the driver path; ``checkpoint`` does
+    not change which path runs."""
     v = vocab.select("word", spaced(F.col("word")).alias("s"), "n")
     if checkpoint:
         # the vocab frame is small (distinct words); materialize per
         # round so round k's pair scan doesn't replay rounds 1..k-1's
         # nested folds
         v = v.localCheckpoint(eager=True)
-        if local_threshold and v.count() <= local_threshold:
-            return _learn_local(v, merges)
+    if local_threshold and v.count() <= local_threshold:
+        return _learn_local(v, merges)
     out: list[dict] = []
     for k in range(1, merges + 1):
         top = (

@@ -86,17 +86,19 @@ def _could_be_narrow(df: DataFrame, want: int) -> bool:
     """True when the optimizer's size estimate says ``df`` might plan
     to fewer than ``want`` partitions (size < want x maxPartitionBytes)
     — the cheap, no-job pre-filter for the exact RDD-partition probe.
-    Estimation failures err on True (probe to be sure)."""
+    maxPartitionBytes comes from the JVM's SQLConf, already parsed to
+    bytes, so any user spelling (``128m``, ``1g``, ``134217728``)
+    counts.  Estimation failures err on True (probe to be sure)."""
     try:
         size = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
-        max_pb = str(
-            df.sparkSession.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728b"
-            )
-        ).lower().rstrip("b")
-        return size < want * int(max_pb)
+        max_pb = int(
+            df.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .filesMaxPartitionBytes()
+        )
+        return size < want * max_pb
     except Exception:  # noqa: BLE001 - any estimation failure
         return True
 

@@ -383,6 +383,11 @@ def pagerank_fixed_point(
     symmetrized undirected graph): the node set is derived from the
     src column alone, halving the node-distinct's input.
 
+    Graphs of at most ``local_threshold`` edges replay the loop on the
+    driver (:func:`_pagerank_local_rows`), bit-identical to the
+    distributed loop; ``local_threshold=0`` disables the driver path,
+    and ``checkpoint`` does not change which path runs.
+
     r12 optimization note: three per-iteration restructurings were
     tried against this loop and all measured AT OR BELOW noise level
     or slower at bench scale, so the shuffle-join/checkpoint shape
@@ -410,23 +415,23 @@ def pagerank_fixed_point(
         # exponent was 1.5 purely from re-parsing).  One upstream pass,
         # then every derived frame reads the cache.
         edges = edges.persist()
+    # r12/r13: driver-sized graphs iterate ON THE DRIVER (the
+    # gram_power_iteration treatment).  Below ``local_threshold``
+    # edges the whole graph is tens of MB — bounded by the SAME
+    # driver-memory argument as bloom_bitmap's O(m) collect, and
+    # independent of cluster size — while the distributed loop pays
+    # iterations x (join job + partial agg + eager checkpoint) in
+    # scheduler round-trips on node-bounded frames.  The driver replay
+    # is exact (see _pagerank_local_rows: integer sums, trunc division
+    # on positive values, same base/teleport fold, int64 overflow
+    # guarded with exact Python-int bounds) so results are
+    # bit-identical.  Above the threshold (any real web graph) nothing
+    # changes.  The r13 default of 2M edges (vs r12's 50k) rides the
+    # vectorized replay: ~32 MB of int64 edge arrays, the bloom_bitmap
+    # memory class.  The count also materializes the persist above.
+    if checkpoint or local_threshold:
         n_edges = edges.count()
-        # r12/r13: driver-sized graphs iterate ON THE DRIVER (the
-        # gram_power_iteration treatment).  The edge count is already
-        # in hand from the persist above; below ``local_threshold``
-        # edges the whole graph is tens of MB — bounded by the SAME
-        # driver-memory argument as bloom_bitmap's O(m) collect, and
-        # independent of cluster size — while the distributed loop
-        # pays iterations x (join job + partial agg + eager checkpoint)
-        # in scheduler round-trips on node-bounded frames.  The driver
-        # replay is exact (see _pagerank_local_rows: integer sums,
-        # trunc division on positive values, same base/teleport fold,
-        # int64 overflow guarded with exact Python-int bounds) so
-        # results are bit-identical.  Above the threshold (any real
-        # web graph) nothing changes.  The r13 default of 2M edges
-        # (vs r12's 50k) rides the vectorized replay: ~32 MB of int64
-        # edge arrays, the bloom_bitmap memory class.
-        if n_edges <= local_threshold:
+        if local_threshold and n_edges <= local_threshold:
             out_rows = _pagerank_local_rows(
                 edges, iterations, damping_pct, scale, base, symmetric,
                 n_edges,

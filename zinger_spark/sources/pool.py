@@ -8,29 +8,28 @@ Reference semantics (/root/reference):
   - data records and marker records (done/cursor) share the pool
     (etl/pipeline.go:29, design.md:117-128)
 
-Spark mapping: a directory of parquet commit files.  One commit = one
-atomically-renamed subdirectory write, so concurrent readers never see
-a partial batch (the poor-man's Delta transaction — swap in Delta Lake
-`format("delta")` when the runtime ships it).  Readers use
-``mergeSchema`` so commits carrying different (fused-compatible) value
-schemas coexist, mirroring Zed's per-record typing.
+Spark mapping: one pool, two table formats, one layout each.
 
-Scale notes: at 100 TB a pool is partitioned by ``kafka.topic`` and
-sorted/z-ordered by ``kafka.offset`` within partitions, so topic
-filters prune partitions and offset ranges prune files on min/max
-stats.  ``partition_by_topic=True`` enables the layout; the tiny test
-pools keep flat files.
+- ``commits`` (default): a flat directory of ``commit-<id>/`` parquet
+  dirs.  One commit = one atomically-renamed subdirectory write (or a
+  direct write on object stores, where a rename is a copy), and
+  ``_manifest.json`` — written by ``create`` and required from then on
+  — is the one record of which commits are live: a commit becomes
+  visible when the manifest append lands, never by directory listing.
+- ``txlog``: parquet files under ``data/commit-<id>/`` published by a
+  per-file transaction log with min/max stats (sources/txlog.py, the
+  Delta/Iceberg seam).  This is the format for pools at scale: topic
+  and offset restrictions prune files from the recorded stats.
 
-Partitioned layout is TOPIC-MAJOR: ``_topic=T/commit-N/part.parquet``.
-Commit-major nesting (``commit-N/_topic=T/``) breaks Spark partition
-discovery across commits (the commit-N path fragment is not key=value:
-CONFLICTING_DIRECTORY_STRUCTURES), forcing a full read to fuse O(commits)
-separate scans.  Topic-major, every read — full pool, one topic, or an
-as-of commit subset — is ONE FileScan: pass the leaf commit dirs with
-``basePath`` at the pool root and discovery recovers ``_topic`` for
-all of them.  The manifest is the commit-visibility truth (partitioned
-pools always carry one): a commit's per-topic dirs are renamed into
-place first and the manifest append publishes them atomically.
+Readers use ``mergeSchema`` so commits carrying different
+(fused-compatible) value schemas coexist, mirroring Zed's per-record
+typing.  Only this module decides where data files live: file-source
+streams over a pool take their glob from ``Pool.data_glob``.
+
+Two older layouts — hive-partitioned ``_topic=T/commit-N`` dirs
+(``"partitioned": true`` in ``_pool.json``) and commit dirs with no
+manifest — are refused with ``PoolError`` on open rather than read as
+empty.
 """
 
 from __future__ import annotations
@@ -50,6 +49,7 @@ from .storage import PosixStorage
 
 POOL_KEY = "kafka.offset"
 _META = "_pool.json"
+_MANIFEST = "_manifest.json"
 
 
 class PoolError(Exception):
@@ -83,6 +83,12 @@ class Pool:
             raise PoolError(
                 f"pool {path} does not have {expected_key} asc pool key"
             )
+        if meta.get("partitioned"):
+            raise PoolError(
+                f"pool {path} uses the hive-partitioned _topic= layout, "
+                "which is no longer supported; recreate it as a txlog pool "
+                "(per-file stats prune topics) and reload its data"
+            )
         self.meta = meta
         self.lock_timeout = self.DEFAULT_LOCK_TIMEOUT
         self._local_lock = threading.RLock()
@@ -95,6 +101,7 @@ class Pool:
             self._log: "TxLog | None" = TxLog(self._fs, path)
         else:
             self._log = None
+            self._read_manifest()  # refuses a manifest-less commits pool
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -104,65 +111,52 @@ class Pool:
         path: str,
         key: str = POOL_KEY,
         order: str = "asc",
-        partition_by_topic: bool = False,
         storage=None,
         table_format: str = "commits",
     ) -> "Pool":
-        """``partition_by_topic`` is the 100-TB layout (SCALE.md):
-        commits are hive-partitioned on kafka.topic so topic filters
-        prune directories before any file is opened.
+        """Create an empty pool at ``path`` and open it.
 
-        ``table_format="txlog"`` swaps commit-dir publication for a
-        per-FILE transaction log with min/max stats (sources/txlog.py —
-        the Delta/Iceberg seam): visibility is one atomic log append,
-        and scoped reads prune files driver-side from recorded stats.
-        Mutually exclusive with ``partition_by_topic`` (stats-based
-        topic pruning replaces the hive layout)."""
+        ``table_format="commits"`` (default) publishes flat commit dirs
+        through ``_manifest.json``.  ``table_format="txlog"`` swaps
+        commit-dir publication for a per-FILE transaction log with
+        min/max stats (sources/txlog.py — the Delta/Iceberg seam):
+        visibility is one atomic log append, and scoped reads prune
+        files driver-side from recorded stats — the layout for pools at
+        scale (SCALE.md)."""
         if order != "asc":
             raise PoolError(f"pool order must be asc (got {order})")
         if table_format not in ("commits", "txlog"):
             raise PoolError(f"unknown table_format {table_format!r}")
-        if table_format == "txlog" and partition_by_topic:
-            raise PoolError(
-                "table_format='txlog' prunes topics from file stats — "
-                "combining it with partition_by_topic is not supported"
-            )
         fs = storage or PosixStorage()
         fs.makedirs(path)
-        fs.write_json_atomic(
-            os.path.join(path, _META),
-            {
-                "key": key,
-                "order": order,
-                "partitioned": partition_by_topic,
-                "format": table_format,
-            },
-        )
-        pool = Pool(spark, path, expected_key=key, storage=storage)
         if table_format == "commits":
             # The manifest is the visibility truth from the first commit
-            # on for EVERY new pool (readers never see a half-renamed
-            # commit or a rename-free direct write, only
-            # manifest-published ones).  Partitioned pools require it
-            # (one rename PER TOPIC is not atomic); flat pools need it
-            # for the rename-free object-store commit path.
-            # Pre-manifest pools remain readable via listing.
-            pool._write_manifest([])
-        return pool
+            # on: readers never see a half-renamed commit or a
+            # rename-free direct write, only manifest-published ones.
+            # Written before _pool.json, so no reader can open the pool
+            # without it.
+            fs.write_json_atomic(
+                os.path.join(path, _MANIFEST), {"commits": [], "orphaned": {}}
+            )
+        fs.write_json_atomic(
+            os.path.join(path, _META),
+            {"key": key, "order": order, "format": table_format},
+        )
+        return Pool(spark, path, expected_key=key, storage=storage)
 
     # -- read ---------------------------------------------------------------
 
     def _manifest_path(self) -> str:
-        return os.path.join(self.path, "_manifest.json")
+        return os.path.join(self.path, _MANIFEST)
 
-    def _read_manifest(self) -> dict | None:
-        return self._fs.read_json(self._manifest_path())
-
-    def _live_commits(self) -> list[str] | None:
-        """Commit names listed in the manifest, or None when the pool
-        predates manifests (then directory listing is the truth)."""
-        m = self._read_manifest()
-        return None if m is None else m["commits"]
+    def _read_manifest(self) -> dict:
+        m = self._fs.read_json(self._manifest_path())
+        if m is None:
+            raise PoolError(
+                f"pool {self.path}: missing {_MANIFEST} — the manifest "
+                "is the only record of a commits pool's live commits"
+            )
+        return m
 
     def _write_manifest(
         self,
@@ -179,61 +173,33 @@ class Pool:
         reads below it would silently miss merged-away rows, so df()
         refuses them loudly instead."""
         m = {"commits": commits, "orphaned": orphaned or {}}
-        prior = self._read_manifest() or {}
+        prior = self._read_manifest()
         floor = max(filter(None, [prior.get("asof_floor"), asof_floor]), default=None)
         if floor is not None:
             m["asof_floor"] = floor
         self._fs.write_json_atomic(self._manifest_path(), m)
 
     def _commit_names(self) -> list[str]:
-        """Live commit names, sorted (= commit order: ms-prefixed ids).
-        Manifest is the truth when present; the directory-listing
-        fallback only applies to pre-manifest FLAT pools (partitioned
-        pools always carry a manifest, see ``create``).  txlog pools
-        report the commits recorded in the log."""
+        """Live commit names, sorted (= commit order: ms-prefixed ids):
+        the manifest's list, or the commits recorded in a txlog pool's
+        log."""
         if self._log is not None:
             return sorted(self._log.snapshot()["commits"])
-        live = self._live_commits()
-        if live is not None:
-            return sorted(live)
-        if self.meta.get("partitioned"):
-            names = set()
-            for td in self._topic_dirs():
-                for c in self._fs.listdir(os.path.join(self.path, td)):
-                    if c.startswith("commit-"):
-                        names.add(c)
-            return sorted(names)
-        return sorted(
-            d
-            for d in self._fs.listdir(self.path)
-            if d.startswith("commit-") and self._fs.isdir(os.path.join(self.path, d))
-        )
+        return sorted(self._read_manifest()["commits"])
 
     def _commit_dirs(self) -> list[str]:
         return [os.path.join(self.path, d) for d in self._commit_names()]
 
-    def _topic_dirs(self) -> list[str]:
-        """``_topic=T`` dir names present in a partitioned pool."""
-        return sorted(
-            d
-            for d in self._fs.listdir(self.path)
-            if d.startswith("_topic=") and self._fs.isdir(os.path.join(self.path, d))
-        )
-
-    def _leaf_dirs(
-        self, commits: list[str], topic: str | None = None
-    ) -> list[str]:
-        """Data dirs for the given commits of a partitioned pool:
-        ``_topic=T/commit-N`` for each topic (or just the one), existing
-        dirs only — a commit only materializes the topics it carried."""
-        tds = [f"_topic={topic}"] if topic is not None else self._topic_dirs()
-        out = []
-        for td in tds:
-            for c in commits:
-                d = os.path.join(self.path, td, c)
-                if self._fs.isdir(d):
-                    out.append(d)
-        return out
+    def data_glob(self) -> str:
+        """Glob naming the dirs that hold the pool's data files —
+        ``commit-*`` for commits pools, ``data/commit-*`` for txlog
+        pools — for file-source streams that must see every new commit
+        (``to_kafka.continuous_sink``, ``EtlPipeline.run_stream``).
+        The glob sees files as they land, which can be just BEFORE the
+        commit is published (manifest or log append); readers of the
+        pool itself go through ``df``."""
+        sub = "data/commit-*" if self._log is not None else "commit-*"
+        return os.path.join(self.path, sub)
 
     def is_empty(self) -> bool:
         if self._log is not None:
@@ -342,15 +308,13 @@ class Pool:
         self._fs.write_json_atomic(os.path.join(self.path, name), obj)
 
     def df(self, topic: str | None = None, as_of: str | None = None) -> DataFrame:
-        """The whole pool as a DataFrame (schema-merged across commits).
+        """The whole pool as a DataFrame (schema-merged across commits),
+        read as ONE parquet scan over the live commits.
 
-        ``topic`` matters for partitioned pools: the hive partition
-        column is ``_topic`` (a copy of kafka.topic), and a filter on
-        the NESTED kafka.topic never reaches partition pruning — so the
-        topic restriction must be applied to ``_topic`` BEFORE the
-        column is dropped. With it, a topic-scoped read lists only that
-        topic's directories (PartitionFilters in the scan, verified by
-        test_partitioned_pool_prunes_by_topic).
+        ``topic`` restricts to one topic's records: a filter on
+        ``kafka.topic`` for commits pools, and on txlog pools also a
+        driver-side prune of the files whose recorded topic stats
+        exclude it.
 
         ``as_of`` is time travel (the Delta ``versionAsOf`` analog):
         pass a commit id previously returned by ``load_batch`` and the
@@ -362,10 +326,11 @@ class Pool:
         VACUUM bounds its time travel, but loud)."""
         if self._log is not None:
             return self._df_txlog(topic=topic, as_of=as_of)
-        commits = self._commit_names()
+        m = self._read_manifest()
+        commits = sorted(m["commits"])
         if as_of is not None:
             cut = f"commit-{as_of}"
-            floor = (self._read_manifest() or {}).get("asof_floor")
+            floor = m.get("asof_floor")
             if floor is not None and cut < floor:
                 raise PoolError(
                     f"pool {self.path}: as_of {as_of} predates compaction "
@@ -377,28 +342,7 @@ class Pool:
                 raise PoolError(f"pool {self.path}: no commits at or before {as_of}")
         if not commits:
             raise PoolError(f"pool {self.path} is empty")
-        reader = self.spark.read.option("mergeSchema", "true")
-        if self.meta.get("partitioned"):
-            # Topic-major layout: EVERY read — full pool, one topic, or
-            # an as-of subset — is ONE FileScan over the leaf commit
-            # dirs with basePath at the pool root (discovery recovers
-            # `_topic` for all of them).  A topic restriction is
-            # path-level pruning, stronger than a partition filter:
-            # other topics' directories are never even listed.
-            reader = reader.option("basePath", self.path)
-            leafs = self._leaf_dirs(commits, topic=topic)
-            if not leafs:
-                # topic absent in every commit: empty frame, pool schema
-                full = self._leaf_dirs(commits)
-                if not full:
-                    raise PoolError(f"pool {self.path} is empty")
-                return (
-                    reader.parquet(*full)
-                    .drop("_topic")
-                    .filter(F.col("kafka.topic") == topic)
-                )
-            return reader.parquet(*leafs).drop("_topic")
-        out = reader.parquet(*[os.path.join(self.path, c) for c in commits])
+        out = self._read_commits(commits)
         if topic is not None:
             out = out.filter(F.col("kafka.topic") == topic)
         return out
@@ -510,11 +454,8 @@ class Pool:
 
     def load_batch(self, df: DataFrame) -> str:
         """Atomic commit: write to a temp dir, rename into place
-        (LoadBatch, fifo/lake.go:58-60). Returns the commit id.
-
-        Partitioned pools rename one dir PER TOPIC (topic-major layout)
-        and publish them with the manifest append — the manifest swap,
-        not the renames, is the visibility point.
+        (LoadBatch, fifo/lake.go:58-60). Returns the commit id.  The
+        manifest append, not the rename, is the visibility point.
 
         txlog pools write data files straight to their final prefix and
         publish them as per-file ADD actions (with footer min/max
@@ -529,28 +470,11 @@ class Pool:
         # data straight to its final commit prefix — the manifest
         # append below is the only visibility point either way, and an
         # unpublished dir left by a crash is reclaimed by vacuum()'s
-        # existing not-in-manifest sweep.  Needs a manifest (any pool
-        # created since manifests exist); manifest-less legacy pools
-        # use listing as truth, where an unpublished dir WOULD be
-        # visible, so they keep tmp+rename.  Partitioned pools also
-        # keep it: the topic-major layout (`_topic=X/commit-id`) is
-        # what makes topic reads O(topic's commits) instead of
-        # O(all commits), and preserving it needs the per-topic move.
-        direct = (
-            getattr(self._fs, "rename_is_copy", False)
-            and not self.meta.get("partitioned")
-            and self._read_manifest() is not None
-        )
-        tmp = os.path.join(
-            self.path, f"commit-{commit_id}" if direct else f".tmp-{commit_id}"
-        )
-        if self.meta.get("partitioned"):
-            df = df.withColumn("_topic", F.col("kafka.topic")).sortWithinPartitions(
-                "kafka.offset"
-            )
-            df.write.mode("overwrite").partitionBy("_topic").parquet(tmp)
-        else:
-            df.write.mode("overwrite").parquet(tmp)
+        # not-in-manifest sweep.
+        name = f"commit-{commit_id}"
+        direct = getattr(self._fs, "rename_is_copy", False)
+        tmp = os.path.join(self.path, name if direct else f".tmp-{commit_id}")
+        df.write.mode("overwrite").parquet(tmp)
         # All-empty batch = "no commit happened", SAME as the txlog
         # path (the two formats are one logical pool contract): a
         # zero-row commit would flip is_empty() and mint a hollow
@@ -568,32 +492,23 @@ class Pool:
         # two concurrent load_batch calls can each read the same
         # manifest and one commit silently vanishes from the list.
         with self.writer_lock():
-            if direct:
-                m = self._read_manifest()
-                self._write_manifest(
-                    m["commits"] + [f"commit-{commit_id}"], m.get("orphaned")
-                )
-            else:
-                self._publish_commit(tmp, commit_id)
+            if not direct:
+                self._fs.rename(tmp, os.path.join(self.path, name))
+            m = self._read_manifest()
+            self._write_manifest(m["commits"] + [name], m.get("orphaned"))
         return commit_id
 
     def _written_rowcount_is_zero(self, root: str) -> bool:
-        """True iff every parquet file under ``root`` (one level of
-        ``_topic=`` partitioning included) has zero rows.  Footer-only,
-        short-circuits on the first non-empty file."""
+        """True iff every parquet file in the commit dir ``root`` has
+        zero rows.  Footer-only, short-circuits on the first non-empty
+        file."""
         import pyarrow.parquet as pq  # noqa: PLC0415
 
-        stack = [root]
-        while stack:
-            d = stack.pop()
-            for name in self._fs.listdir(d):
-                full = os.path.join(d, name)
-                if name.startswith("_topic=") and self._fs.isdir(full):
-                    stack.append(full)
-                elif name.endswith(".parquet"):
-                    if pq.ParquetFile(full).metadata.num_rows > 0:
-                        return False
-        return True
+        return not any(
+            pq.ParquetFile(os.path.join(root, name)).metadata.num_rows > 0
+            for name in self._fs.listdir(root)
+            if name.endswith(".parquet")
+        )
 
     def _load_batch_txlog(self, df: DataFrame, commit_id: str) -> str:
         """txlog commit: Spark writes parquet under ``data/<commit>/``
@@ -630,23 +545,6 @@ class Pool:
             )
         return commit_id
 
-    def _publish_commit(self, tmp: str, commit_id: str) -> None:
-        """Move a written tmp dir into the live layout and append the
-        commit to the manifest.  Call under the writer lock."""
-        name = f"commit-{commit_id}"
-        if self.meta.get("partitioned"):
-            for td in sorted(self._fs.listdir(tmp)):
-                if not td.startswith("_topic="):
-                    continue
-                self._fs.makedirs(os.path.join(self.path, td))
-                self._fs.rename(os.path.join(tmp, td), os.path.join(self.path, td, name))
-            self._fs.rmtree(tmp)  # leftover _SUCCESS markers
-        else:
-            self._fs.rename(tmp, os.path.join(self.path, name))
-        m = self._read_manifest()
-        if m is not None:
-            self._write_manifest(m["commits"] + [name], m.get("orphaned"))
-
     def drop_commit(self, commit_id: str) -> None:
         """Retract a just-written commit (used to take back an empty
         ETL batch).  Only safe for the most recent commit written by
@@ -673,24 +571,12 @@ class Pool:
             return
         with self.writer_lock():
             m = self._read_manifest()
-            if m is not None:
-                self._write_manifest(
-                    [c for c in m["commits"] if c != name], m.get("orphaned")
-                )
-            for d in self._commit_instances(name):
+            self._write_manifest(
+                [c for c in m["commits"] if c != name], m.get("orphaned")
+            )
+            d = os.path.join(self.path, name)
+            if self._fs.isdir(d):
                 self._fs.rmtree(d)
-
-    def _commit_instances(self, name: str) -> list[str]:
-        """On-disk dirs holding a commit's data: one flat dir, or one
-        per topic in the partitioned layout."""
-        if self.meta.get("partitioned"):
-            return [
-                os.path.join(self.path, td, name)
-                for td in self._topic_dirs()
-                if self._fs.isdir(os.path.join(self.path, td, name))
-            ]
-        d = os.path.join(self.path, name)
-        return [d] if self._fs.isdir(d) else []
 
     # -- offset bookkeeping (A9-A11) ----------------------------------------
 
@@ -795,11 +681,11 @@ class Pool:
         return {r["topic"]: int(r["offset"]) + 1 for r in rows if r["topic"] is not None}
 
     def read_batch(self, topic: str, offset: int, size: int, transform=None) -> DataFrame:
-        """Ordered batch scan (fifo/lake.go:84-92). Topic-scoped read so
-        partitioned pools prune to the topic's directories; txlog pools
-        additionally prune files whose recorded max offset is below the
-        batch start — a resume-from-cursor read touches only the tail
-        files, not the whole topic history."""
+        """Ordered batch scan (fifo/lake.go:84-92) over a topic-scoped
+        read.  txlog pools prune files whose recorded topic stats
+        exclude the topic or whose max offset is below the batch start
+        — a resume-from-cursor read touches only the tail files, not
+        the whole topic history."""
         if self._log is not None:
             base = self._df_txlog(topic=topic, offset_lo=offset)
         else:
@@ -882,7 +768,7 @@ class Pool:
             )
 
     def _commit_size(self, name: str) -> int:
-        return sum(self._fs.tree_size(d) for d in self._commit_instances(name))
+        return self._fs.tree_size(os.path.join(self.path, name))
 
     def _compact_locked(
         self,
@@ -894,14 +780,6 @@ class Pool:
         old_names = self._commit_names()
         if len(old_names) <= 1:
             return len(old_names)
-        if self._read_manifest() is None:
-            # Bootstrap the manifest to the CURRENT commit set BEFORE
-            # the new dir appears: from here on the manifest (not
-            # directory listing) is the truth, so the rename below can
-            # never double-count — a crash in any window leaves either
-            # the old list (new dir invisible, orphaned on disk) or the
-            # swapped list, both consistent.
-            self._write_manifest(old_names)
         if small_bytes is None:
             merged, kept = list(old_names), []
         else:
@@ -919,22 +797,10 @@ class Pool:
         )
         commit_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
         tmp = os.path.join(self.path, f".tmp-{commit_id}")
-        if self.meta.get("partitioned"):
-            snapshot.withColumn("_topic", F.col("kafka.topic")).write.mode(
-                "overwrite"
-            ).partitionBy("_topic").parquet(tmp)
-            name = f"commit-{commit_id}"
-            for td in sorted(self._fs.listdir(tmp)):
-                if not td.startswith("_topic="):
-                    continue
-                self._fs.makedirs(os.path.join(self.path, td))
-                self._fs.rename(os.path.join(tmp, td), os.path.join(self.path, td, name))
-            self._fs.rmtree(tmp)
-        else:
-            snapshot.write.mode("overwrite").parquet(tmp)
-            self._fs.rename(tmp, os.path.join(self.path, f"commit-{commit_id}"))
+        snapshot.write.mode("overwrite").parquet(tmp)
+        self._fs.rename(tmp, os.path.join(self.path, f"commit-{commit_id}"))
         now = time.time()
-        prior = (self._read_manifest() or {}).get("orphaned", {})
+        prior = self._read_manifest().get("orphaned", {})
         # time travel below the merged output would silently miss the
         # merged-away rows (their commits leave the manifest but the
         # replacement carries a NEWER name) — raise the as-of floor so
@@ -1062,15 +928,11 @@ class Pool:
         return len(merged)
 
     def _read_commits(self, commits: list[str]) -> DataFrame:
-        """Schema-merged read of a specific commit subset (compaction's
-        input selector; ``df()`` is the all-live special case)."""
-        reader = self.spark.read.option("mergeSchema", "true")
-        if self.meta.get("partitioned"):
-            leafs = self._leaf_dirs(commits)
-            if not leafs:
-                raise PoolError(f"pool {self.path}: no data in {commits}")
-            return reader.option("basePath", self.path).parquet(*leafs).drop("_topic")
-        return reader.parquet(*[os.path.join(self.path, c) for c in commits])
+        """Schema-merged read of a commit subset as one parquet scan
+        (``df()`` and compaction's input selector)."""
+        return self.spark.read.option("mergeSchema", "true").parquet(
+            *[os.path.join(self.path, c) for c in commits]
+        )
 
     def vacuum(
         self,
@@ -1088,8 +950,8 @@ class Pool:
         backend an IN-FLIGHT direct commit looks exactly like a crashed
         one until its manifest append lands (the Delta VACUUM retention
         contract: never set it below your longest writer).  Pass it
-        explicitly only when no writer can be active.  No-op for
-        manifest-less pools. Returns dirs removed."""
+        explicitly only when no writer can be active.  Returns dirs
+        removed."""
         removed = 0
         now = time.time()
         if unpublished_grace_seconds is None:
@@ -1098,8 +960,7 @@ class Pool:
             return self._vacuum_txlog(grace_seconds, unpublished_grace_seconds, now)
         # '.tmp-*' dirs are writes that crashed between the Spark write
         # and os.rename — never referenced by the manifest or visible to
-        # any reader (manifest-less pools list only commit-* dirs), so
-        # reclaim them on the mtime clock in every pool mode.
+        # any reader, so reclaim them on the mtime clock.
         for d in self._fs.listdir(self.path):
             full = os.path.join(self.path, d)
             if not (d.startswith(".tmp-") and self._fs.isdir(full)):
@@ -1109,26 +970,18 @@ class Pool:
                 removed += 1
         with self.writer_lock():
             m = self._read_manifest()
-            if m is None:
-                return removed
             keep = set(m["commits"])
             orphaned = m.get("orphaned", {})
             orphan_removed = 0
             remaining_orphans = dict(orphaned)
-            # on-disk commit names (flat dirs, or per-topic instances in
-            # the partitioned layout) that the manifest no longer lists
-            on_disk = set()
-            for d in self._fs.listdir(self.path):
-                if d.startswith("commit-") and self._fs.isdir(os.path.join(self.path, d)):
-                    on_disk.add(d)
-            if self.meta.get("partitioned"):
-                for td in self._topic_dirs():
-                    for c in self._fs.listdir(os.path.join(self.path, td)):
-                        if c.startswith("commit-"):
-                            on_disk.add(c)
-            for name in sorted(on_disk - keep):
-                instances = self._commit_instances(name)
-                if not instances:
+            # on-disk commit dirs that the manifest no longer lists
+            for name in sorted(self._fs.listdir(self.path)):
+                full = os.path.join(self.path, name)
+                if not (
+                    name.startswith("commit-")
+                    and name not in keep
+                    and self._fs.isdir(full)
+                ):
                     continue
                 # orphan-recorded dirs were PUBLISHED then superseded:
                 # the orphaning clock + reader grace applies.  A dir
@@ -1139,11 +992,10 @@ class Pool:
                 if name in orphaned:
                     since, cutoff = orphaned[name], grace_seconds
                 else:
-                    since = self._fs.mtime(instances[0])
+                    since = self._fs.mtime(full)
                     cutoff = unpublished_grace_seconds
                 if now - since >= cutoff:
-                    for inst in instances:
-                        self._fs.rmtree(inst)
+                    self._fs.rmtree(full)
                     remaining_orphans.pop(name, None)
                     orphan_removed += 1
             if orphan_removed:

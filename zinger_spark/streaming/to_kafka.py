@@ -167,26 +167,15 @@ def continuous_sink(
     reader = spark.readStream.schema(schema).option("mergeSchema", "true")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    # Partitioned pools are topic-major (_topic=T/commit-N/); a topic
-    # restriction becomes path-level pruning — the stream never lists
-    # other topics' directories.
-    if pool.meta.get("format") == "txlog":
-        # Delta-format pools write data under data/commit-<id>/ and
-        # publish via one log append AFTER the files land.  File-source
-        # discovery therefore races the append: rows from a commit can
-        # be produced one trigger before the log records it.  The
-        # offset watermark keeps the broker exactly-once regardless
-        # (the retried/compacted copies of those offsets are dropped);
-        # the one divergence from the batch sync loop is a crashed,
-        # never-retried load, whose dark rows reach the broker once
-        # even though the pool forgets them — same blast radius as one
-        # micro-batch, reclaimed on the pool side by vacuum.
-        stream = reader.parquet(f"{pool.path}/data/commit-*")
-    elif pool.meta.get("partitioned"):
-        td = f"_topic={topic}" if topic is not None else "_topic=*"
-        stream = reader.parquet(f"{pool.path}/{td}/commit-*")
-    else:
-        stream = reader.parquet(f"{pool.path}/commit-*")
+    # The glob sees a commit's files as they land, which can be one
+    # trigger before the commit is published (manifest or log append).
+    # The offset watermark keeps the broker exactly-once regardless
+    # (the retried/compacted copies of those offsets are dropped); the
+    # one divergence from the batch sync loop is a crashed,
+    # never-retried load, whose dark rows reach the broker once even
+    # though the pool forgets them — same blast radius as one
+    # micro-batch, reclaimed on the pool side by vacuum.
+    stream = reader.parquet(pool.data_glob())
     if topic is not None:
         stream = stream.filter(F.col("kafka.topic") == topic)
         if "_type" in stream.columns:
