@@ -186,8 +186,11 @@ def test_oracle_survives_pair_exhaustion(spark):
 
     import duckdb
 
+    import pathlib
+
     spec = importlib.util.spec_from_file_location(
-        "entry_for_bpe_test", "/root/repo/__spark_entry__.py"
+        "entry_for_bpe_test",
+        pathlib.Path(__file__).resolve().parents[1] / "__spark_entry__.py",
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

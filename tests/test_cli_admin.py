@@ -469,9 +469,10 @@ def test_cli_train_quality_and_bpe_artifacts(spark, tmp_path):
 
 
 def test_datacard_builds_and_is_deterministic(spark):
+    import pathlib
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "tools"))
     from datacard import build_card
 
     a = build_card(spark, "/root/testdata/sf0.001")

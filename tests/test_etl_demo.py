@@ -912,7 +912,7 @@ transforms:
             "kafka.offset", "value.ID", "value.status"
         ).collect()
     }
-    salted._persisted.unpersist()
+    salted._release()
     plain = EtlPipeline(spark, mk(0), lambda n: pools[n])
     data0, _m0 = plain.build()
     got_plain = {
@@ -921,6 +921,167 @@ transforms:
             "kafka.offset", "value.ID", "value.status"
         ).collect()
     }
-    plain._persisted.unpersist()
+    plain._release()
     assert got_salted == got_plain
     assert len(got_salted) == int(n_rows * 0.9)  # hot matches only
+
+
+# ---------------------------------------------------------------------------
+# Window-derived cursors against a brute-force low-water mark
+
+
+def _brute_force_cursors(pools: dict, topics: list[str]) -> dict[str, int]:
+    """Per input topic, from ALL of both pools: (min data offset with no
+    done marker) - 1, or the max data offset when every one is done —
+    the low-water mark the cursor sidecar should hold (absent when it
+    would be -1, as the planner never writes a cursor below 0)."""
+    from pyspark.sql import functions as F
+
+    def offsets(pool, kind):
+        rows = (
+            pool.df()
+            .filter(F.col("_type") == kind)
+            .select("kafka.topic", "kafka.offset")
+            .collect()
+        )
+        return {(r["topic"], r["offset"]) for r in rows}
+
+    data, done = offsets(pools["Raw"], "data"), offsets(pools["Staging"], "done")
+    out = {}
+    for topic in topics:
+        offs = sorted(o for t, o in data if t == topic)
+        if not offs:
+            continue
+        pending = [o for o in offs if (topic, o) not in done]
+        cursor = offs[-1] if not pending else pending[0] - 1
+        if cursor >= 0:
+            out[topic] = cursor
+    return out
+
+
+def test_window_cursors_match_brute_force_low_water_mark(spark, pools, monkeypatch):
+    """The cursor advances from the run's own window and done markers,
+    with no second pass over the pools.  Over a late denorm partner
+    (the cursor must jump past records already done), records that
+    match no rule, offset gaps and one right record joined to several
+    left records, it equals the brute-force low-water mark computed
+    from both pools — and lags it, never leads it, when records land
+    between build and advance."""
+    pipeline = EtlPipeline(spark, make_transform(), lambda name: pools[name])
+    topics = ["Invoices", "InvoiceStatus"]
+
+    def load(invoices, statuses):
+        if invoices:
+            pools["Raw"].load_batch(
+                spark.createDataFrame(invoices, envelope_schema(AFTER_INV))
+            )
+        if statuses:
+            pools["Raw"].load_batch(
+                spark.createDataFrame(statuses, envelope_schema(AFTER_IS))
+            )
+
+    # run 1: Invoices 1 (op c) waits for its partner; 2, 3, 7 are done
+    # (a gap at 4-6); InvoiceStatus 4 (op c) waits for invoice 105
+    load(
+        [
+            inv(1, 100, "Alice", "taco", "c"),
+            inv(2, 101, "Bob", "burrito", "u"),
+            inv(3, 102, "Charlie", "enchilada", "u"),
+            inv(7, 103, "Dan", "beans", "u"),
+        ],
+        [ist(1, 80, 101, "paid", "u"), ist(4, 81, 105, "pending", "c")],
+    )
+    assert pipeline.run() == 8
+    assert pipeline._read_cursors() == {"Invoices": 0, "InvoiceStatus": 3}
+    assert pipeline._read_cursors() == _brute_force_cursors(pools, topics)
+
+    # run 2: invoice 1's partner arrives one run late, so the Invoices
+    # cursor jumps past the already-done 2, 3 and 7; invoices 8 and 9
+    # both join InvoiceStatus 4 (its offset is marked twice);
+    # InvoiceStatus 12 matches no rule and pins that cursor
+    load(
+        [inv(8, 105, "Eve", "salsa", "c"), inv(9, 105, "Eve", "chips", "r")],
+        [ist(9, 82, 100, "pending", "c"), ist(12, 83, 100, "lost", "x")],
+    )
+    assert pipeline.run() == 6
+    assert pipeline._read_cursors() == {"Invoices": 9, "InvoiceStatus": 11}
+    assert pipeline._read_cursors() == _brute_force_cursors(pools, topics)
+    done_4 = (
+        pools["Staging"].df()
+        .filter("_type = 'done' AND kafka.topic = 'InvoiceStatus' AND kafka.offset = 4")
+        .count()
+    )
+    assert done_4 == 2
+
+    # run 3: Invoices 15 lands after build and before the cursor
+    # advances: not in the window, so the cursor stops below it
+    load([inv(11, 107, "Fay", "rice", "u")], [])
+    advance = pipeline._advance_cursors
+
+    def ingest_then_advance(marked):
+        load([inv(15, 108, "Gus", "corn", "u")], [])
+        advance(marked)
+
+    monkeypatch.setattr(pipeline, "_advance_cursors", ingest_then_advance)
+    assert pipeline.run() == 2
+    monkeypatch.undo()
+    brute = _brute_force_cursors(pools, topics)
+    cursors = pipeline._read_cursors()
+    assert cursors == {"Invoices": 11, "InvoiceStatus": 11}
+    assert brute == {"Invoices": 14, "InvoiceStatus": 11}
+    assert all(cursors[t] <= brute[t] for t in topics)
+
+    # run 4: the late record is ETL'd and the cursors meet again
+    assert pipeline.run() == 2
+    assert pipeline._read_cursors() == {"Invoices": 15, "InvoiceStatus": 11}
+    assert pipeline._read_cursors() == _brute_force_cursors(pools, topics)
+    # an idle run writes nothing and keeps the cursors
+    before = staging_flat(pools["Staging"])
+    assert pipeline.run() == 0
+    assert staging_flat(pools["Staging"]) == before
+    assert pipeline._read_cursors() == _brute_force_cursors(pools, topics)
+
+
+def test_micro_batch_takes_window_form_offset_assignment(spark, tmp_path, monkeypatch):
+    """A demo micro-batch assigns output offsets with the per-topic
+    window: the strategy follows the window's exact size, not
+    Catalyst's estimate (which multiplies the children's sizes for the
+    denorm join).  Forcing the distributed prefix sum
+    (PREFIX_SUM_CUTOVER_BYTES = 0) leaves Staging row-for-row
+    identical."""
+    from zinger_spark.operators import offsets as zoff
+
+    def staging_rows(cutover: int | None, name: str):
+        if cutover is not None:
+            monkeypatch.setattr(zoff, "PREFIX_SUM_CUTOVER_BYTES", cutover)
+        pools = {
+            p: Pool.create(spark, str(tmp_path / name / p)) for p in ("Raw", "Staging")
+        }
+        pipeline = EtlPipeline(spark, make_transform(), lambda p: pools[p])
+        plans = []
+        for invoices, statuses in BATCHES:
+            if invoices:
+                pools["Raw"].load_batch(
+                    spark.createDataFrame(invoices, envelope_schema(AFTER_INV))
+                )
+            if statuses:
+                pools["Raw"].load_batch(
+                    spark.createDataFrame(statuses, envelope_schema(AFTER_IS))
+                )
+            data, _markers = pipeline.build()
+            plans.append(data._jdf.queryExecution().executedPlan().toString())
+            pipeline._release()
+            pipeline.run()
+        monkeypatch.undo()
+        df = pools["Staging"].df()
+        return df.schema, sorted(df.collect(), key=repr), plans
+
+    schema, rows, plans = staging_rows(None, "window")
+    for plan in plans:
+        assert "row_number()" in plan
+        assert "_grp_off" not in plan and "rangepartitioning" not in plan
+    schema_ps, rows_ps, plans_ps = staging_rows(0, "prefix_sum")
+    assert all("_grp_off" in plan for plan in plans_ps)
+    assert schema_ps == schema
+    assert rows_ps == rows
+    assert len(rows) == len(GOLDENS[3])

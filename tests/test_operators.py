@@ -1064,9 +1064,10 @@ def test_leakage_safe_split_property(spark):
     of a near-dup cluster gets the SAME split (no leakage across the
     boundary), proportions land near 80/20, and a doc-hash split (the
     naive form) would have straddled."""
+    import pathlib
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
     import __spark_entry__ as m
     from pyspark.sql import functions as F
 

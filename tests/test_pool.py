@@ -5,6 +5,9 @@ reads (the txlog format is covered in test_pool_txlog.py)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -490,3 +493,78 @@ def test_compact_sort_by_cli(spark, tmp_path):
     )
     assert rc == 0
     assert len(pool._commit_dirs()) == 1
+
+
+def _assert_schema_parity(spark, pool):
+    """The recorded table schema, and what ``df()`` reads with, equal
+    what a ``mergeSchema`` footer pass infers over the live commits."""
+    live = [os.path.join(pool.path, c) for c in pool._commit_names()]
+    inferred = spark.read.option("mergeSchema", "true").parquet(*live).schema
+    assert pool._table_schema(pool._read_manifest()) == inferred
+    assert pool.df().schema == inferred
+
+
+def test_recorded_schema_matches_merge_schema(
+    spark, tmp_path, evolving_batches, jobs_started
+):
+    """The manifest records the fused table schema at every commit, so
+    reads plan with no schema-inference job.  Over evolving nested
+    values the record equals what mergeSchema infers over the live
+    commits after each load_batch, after a dropped commit (the schema
+    from before it comes back), on a manifest written before the record
+    existed (backfilled once) and after compaction."""
+    path = str(tmp_path / "evo")
+    pool = Pool.create(spark, path)
+    cids = []
+    for batch in evolving_batches:
+        cids.append(pool.load_batch(batch))
+        _assert_schema_parity(spark, pool)
+    value = pool.df().schema["value"].dataType
+    assert value.fieldNames() == ["a", "b", "c", "d", "e"]
+    assert value["d"].dataType.fieldNames() == ["x", "y"]
+
+    # a commit that widens the schema, then is taken back
+    wide = T.StructType.fromDDL(
+        "kafka struct<topic:string,partition:bigint,offset:bigint>, "
+        "key string, value struct<a:bigint,z:string>, _type string"
+    )
+    cid = pool.load_batch(spark.createDataFrame([(("T", 0, 5), None, (5, "w"), "data")], wide))
+    _assert_schema_parity(spark, pool)
+    assert "z" in pool.df().schema["value"].dataType.fieldNames()
+    pool.drop_commit(cid)
+    _assert_schema_parity(spark, pool)
+    assert "z" not in pool.df().schema["value"].dataType.fieldNames()
+
+    # time travel reads with the schema recorded as of its commit
+    first_two = [os.path.join(path, c) for c in pool._commit_names()[:2]]
+    assert (
+        pool.df(as_of=cids[1]).schema
+        == spark.read.option("mergeSchema", "true").parquet(*first_two).schema
+    )
+
+    # planning a read starts no Spark job
+    def plan_reads():
+        pool.df().schema
+        pool.df(topic="T").schema
+        pool.df(as_of=cids[2]).schema
+        pool.read_batch("T", 1, 10).schema
+
+    assert jobs_started(plan_reads) == 0
+
+    # a manifest without the record: the first read backfills it once
+    manifest = os.path.join(path, "_manifest.json")
+    with open(manifest) as f:
+        m = json.load(f)
+    del m["schemas"]
+    with open(manifest, "w") as f:
+        json.dump(m, f)
+    reopened = Pool(spark, path)
+    assert jobs_started(lambda: reopened.df().schema) >= 1
+    with open(manifest) as f:
+        assert "schemas" in json.load(f)
+    _assert_schema_parity(spark, reopened)
+    assert jobs_started(lambda: reopened.df().schema) == 0
+
+    assert reopened.compact() == len(evolving_batches)
+    _assert_schema_parity(spark, reopened)
+    assert reopened.df().count() == 7

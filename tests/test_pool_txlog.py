@@ -5,6 +5,7 @@ scoped reads prune files driver-side on recorded min/max stats."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -739,3 +740,55 @@ def test_vacuum_grace_capped_by_tombstone_retention(spark, tmp_path):
         pool.vacuum(grace_seconds=30 * 86400.0)
     # at or below the retention: normal path still works
     assert pool.vacuum(grace_seconds=3600.0) == 0
+
+
+def _assert_txlog_schema_parity(spark, pool):
+    """The log's recorded schema, and what ``df()`` reads with, equal
+    what a ``mergeSchema`` footer pass infers over the live files."""
+    snap = pool._log.snapshot()
+    live = [os.path.join(pool.path, f) for f in snap["files"]]
+    inferred = spark.read.option("mergeSchema", "true").parquet(*live).schema
+    assert T.StructType.fromJson(json.loads(snap["schema_string"])) == inferred
+    assert pool.df().schema == inferred
+
+
+def test_txlog_recorded_schema_matches_merge_schema(
+    spark, tmp_path, evolving_batches, jobs_started
+):
+    """txlog twin of test_pool's schema-record test: the log's
+    schemaString equals what mergeSchema infers over the live files
+    after each load_batch, after a retracted commit (the retraction
+    puts back the schema from before it) and after compaction; reads
+    plan with no Spark job."""
+    pool = _mk(spark, tmp_path)
+    cids = []
+    for batch in evolving_batches:
+        cids.append(pool.load_batch(batch))
+        _assert_txlog_schema_parity(spark, pool)
+    value = pool.df().schema["value"].dataType
+    assert value.fieldNames() == ["a", "b", "c", "d", "e"]
+    assert value["d"].dataType.fieldNames() == ["x", "y"]
+
+    wide = T.StructType.fromDDL(
+        "kafka struct<topic:string,partition:bigint,offset:bigint>, "
+        "key string, value struct<a:bigint,z:string>, _type string"
+    )
+    cid = pool.load_batch(spark.createDataFrame([(("T", 0, 5), None, (5, "w"), "data")], wide))
+    _assert_txlog_schema_parity(spark, pool)
+    assert "z" in pool.df().schema["value"].dataType.fieldNames()
+    pool.drop_commit(cid)
+    _assert_txlog_schema_parity(spark, pool)
+    assert "z" not in pool.df().schema["value"].dataType.fieldNames()
+
+    def plan_reads():
+        pool.df().schema
+        pool.df(topic="T").schema
+        pool.df(as_of=cids[2]).schema
+        pool.read_batch("T", 1, 10).schema
+
+    assert jobs_started(plan_reads) == 0
+
+    # the unit of txlog compaction is the file: at least one per commit
+    assert pool.compact() >= len(evolving_batches)
+    _assert_txlog_schema_parity(spark, pool)
+    assert pool.df().count() == 7

@@ -16,9 +16,10 @@ the card diffable across dataset versions.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def build_card(spark, sf_dir: str) -> str:

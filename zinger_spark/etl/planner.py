@@ -30,13 +30,21 @@ steady-state cost is O(new window), not O(pool) — this implements the
 incremental model the reference documents but never built
 (etl/build.go:9-18 "brute force", design.md:117-128 cursor records;
 ours lives in a sidecar file, not pool rows, because data/done rows are
-the pool's public golden contract).  The anti-join right side is the
-done markers ABOVE the cursor (bounded by the in-flight window); no
-broadcast hint is forced — AQE picks broadcast vs shuffle-hash from the
-actual size, so a backfill can't OOM the executors.  The offset
-assignment is one window shuffle on the output topic key — the same
-per-topic serialization point the reference has, but parallel across
-topics.
+the pool's public golden contract).  The done side is the markers
+ABOVE the cursor (bounded by the in-flight window); no broadcast hint
+is forced — AQE picks broadcast vs shuffle-hash from the actual size,
+so a backfill can't OOM the executors.
+
+One run plans and scans its window once (the Structured Streaming
+trigger model: table metadata from the log, then only the new window).
+The window — every input data row above the cursor, flagged done or not
+— is materialised by one aggregation that also yields its exact size
+and each topic's cursor candidates; every rule branch reads it, and the
+cursor advances from it and the run's own done markers, with no second
+pass over the pools.  The offset assignment strategy follows the exact
+window size: one window shuffle on the output topic key for a
+micro-batch (the same per-topic serialization point the reference has,
+but parallel across topics), the distributed prefix sum for a backfill.
 """
 
 from __future__ import annotations
@@ -53,6 +61,7 @@ from .config import ConfigError, Rule, Transform
 
 _ORIG_OFFSET = "__orig_offset"
 _ORIG_TOPIC = "__orig_topic"
+_DONE = "__done"
 
 
 # ---------------------------------------------------------------------------
@@ -159,6 +168,12 @@ class EtlPipeline:
         for route in transform.inputs:
             if route.pool not in self.input_pools:
                 self.input_pools[route.pool] = open_pool(route.pool)
+        # the run's materialised window, its per-topic stats and its
+        # not-done rows with their exact count (build)
+        self._window: DataFrame | None = None
+        self._window_stats: dict = {}
+        self._fresh: DataFrame | None = None
+        self._fresh_rows = 0
 
     def _input_topics(self) -> list[str]:
         """Input topics across ALL output topics, order-stable dedup —
@@ -192,53 +207,7 @@ class EtlPipeline:
     def _write_cursors(self, cursors: dict[str, int]) -> None:
         self.output_pool.write_sidecar(self._cursor_sidecar(), cursors)
 
-    def _cursor_frontier(self) -> DataFrame | None:
-        """Per input topic, the gap-tolerant low-water candidates as ONE
-        DataFrame: ``mx`` = max input DATA offset above the cursor, ``g``
-        = min input data offset above the cursor that lacks a done
-        marker (null when everything seen is done)."""
-        cursors = self._read_cursors()
-        routes = self.transform.routes
-        data_legs, done_legs = [], []
-        for topic in self._input_topics():
-            pool = self.input_pools[routes.lookup_pool(topic)]
-            if pool.is_empty():
-                continue
-            cur = cursors.get(topic, -1)
-            data_legs.append(
-                pool.df(topic=topic)
-                .filter((F.col("_type") == TYPE_DATA) & (F.col("kafka.offset") > cur))
-                .select(
-                    F.col("kafka.topic").alias("__t"),
-                    F.col("kafka.offset").alias("__o"),
-                )
-            )
-            done_legs.append(
-                self.output_pool.df(topic=topic)
-                .filter((F.col("_type") == TYPE_DONE) & (F.col("kafka.offset") > cur))
-                .select(
-                    F.col("kafka.topic").alias("__t"),
-                    F.col("kafka.offset").alias("__d"),
-                )
-            )
-        if not data_legs:
-            return None
-        data_all = data_legs[0]
-        for leg in data_legs[1:]:
-            data_all = data_all.unionAll(leg)
-        done_all = done_legs[0]
-        for leg in done_legs[1:]:
-            done_all = done_all.unionAll(leg)
-        pending = data_all.join(
-            done_all,
-            (data_all["__t"] == done_all["__t"]) & (data_all["__o"] == done_all["__d"]),
-            "left_anti",
-        )
-        mx = data_all.groupBy("__t").agg(F.max("__o").alias("mx"))
-        firsts = pending.groupBy("__t").agg(F.min("__o").alias("g"))
-        return mx.join(firsts, "__t", "left")
-
-    def _advance_cursors(self) -> None:
+    def _advance_cursors(self, marked: DataFrame | None) -> None:
         """Advance each input topic's cursor to the low-water mark over
         ACTUAL INPUT DATA offsets: (min data offset above the cursor
         lacking a done marker) - 1, or the max data offset when all of
@@ -247,30 +216,52 @@ class EtlPipeline:
         done-offset density walk would freeze below the first gap;
         anchoring on the data offsets advances straight past gaps.
 
+        Both candidates come from the run's own window (``build``):
+        ``mx`` is its max offset, ``g`` the min offset of a row that was
+        not done before the run and that ``marked`` — the done markers
+        this run committed, None when it committed none — does not
+        mark.  That is at most one job over the materialised window,
+        never a second pass over the pools.  Rows ingested after
+        ``build`` are not in the window, so the cursor can lag the
+        pools, never lead them.
+
         Records that match no rule — and denorm rows whose join partner
         never arrived — get no done marker, so they PIN the cursor and
         everything above them is rescanned each run (same rescan the
         reference does every run for all unmatched input,
         etl/build.go:9-18; ``cursor_lag`` measures the pinned width).
 
-        ONE Spark job for all topics (union of bounded per-topic legs,
-        two grouped aggs, single collect) — not a job per topic.
-        Lagging is always safe: rows above the cursor still pass the
-        anti-join, so a crash between commit and sidecar write
-        self-heals on the next run.
+        Lagging is always safe: rows above the cursor are flagged done
+        again by the next window, so a crash between commit and sidecar
+        write self-heals on the next run.
         """
         if self.output_pool.is_empty():
             return
-        frontier = self._cursor_frontier()
-        if frontier is None:
-            return
+        stats = self._window_stats
+        pending = {topic: s["g"] for topic, s in stats.items()}
+        if marked is not None:
+            m = marked.select(
+                F.col("kafka.topic").alias("__mt"), F.col("kafka.offset").alias("__mo")
+            )
+            unmarked = (
+                self._fresh.join(
+                    m,
+                    (F.col("kafka.topic") == F.col("__mt"))
+                    & (F.col("kafka.offset") == F.col("__mo")),
+                    "left_anti",
+                )
+                .groupBy(F.col("kafka.topic").alias("__t"))
+                .agg(F.min("kafka.offset").alias("g"))
+            )
+            pending = dict.fromkeys(stats)
+            for row in unmarked.collect():
+                pending[row["__t"]] = row["g"]
         cursors = dict(self._read_cursors())
         changed = False
-        for row in frontier.collect():
-            topic = row["__t"]
-            cur = cursors.get(topic, -1)
-            new_cur = int(row["mx"]) if row["g"] is None else int(row["g"]) - 1
-            if new_cur > cur:
+        for topic, st in stats.items():
+            g = pending.get(topic)
+            new_cur = int(st["mx"]) if g is None else int(g) - 1
+            if new_cur > cursors.get(topic, -1):
                 cursors[topic] = new_cur
                 changed = True
         if changed:
@@ -383,43 +374,58 @@ class EtlPipeline:
 
     # -- plan ---------------------------------------------------------------
 
-    def _fresh_inputs(self) -> DataFrame | None:
-        """Cursor-bounded anti-join prelude: per input topic, scan only
-        offsets above the low-water cursor, then drop records whose
-        offset is already marked done in the output pool
-        (etl/build.go:111-137; incremental model per design.md:80-85).
+    def _window_of(self) -> DataFrame | None:
+        """The run's input window: per input topic, the DATA rows above
+        the low-water cursor, each flagged ``__done`` when the output
+        pool already holds a done marker for its offset
+        (etl/build.go:111-137 anti-join prelude; incremental model per
+        design.md:80-85).  Rules read the not-done rows; the done ones
+        stay in the window for the cursor's max offset.
 
         Both sides carry ``kafka.offset > cursor`` so the parquet scans
-        file-skip on offset min/max stats; the done side is the bounded
-        in-flight window, and AQE (no forced hint) chooses broadcast vs
-        shuffle-hash by its actual size.
+        file-skip on offset min/max stats.  The flag is a left-anti
+        plus a left-semi join against the done markers, which never
+        duplicates a row however often an offset is marked (a denorm
+        right record joined to several left records is marked once per
+        pair) and keeps Catalyst's size estimate at the input's.
         """
         routes = self.transform.routes
         cursors = self._read_cursors()
-        legs = []
+        legs, above = [], []
         for topic in self._input_topics():
             pool = self.input_pools[routes.lookup_pool(topic)]
             if pool.is_empty():
                 continue
             cur = cursors.get(topic, -1)
-            raw = pool.df(topic=topic).filter(F.col("_type") == TYPE_DATA)
+            in_window = F.col("kafka.topic") == topic
             if cur >= 0:
-                raw = raw.filter(F.col("kafka.offset") > cur)
-            if not self.output_pool.is_empty():
-                done = self.output_pool.df(topic=topic).filter(
-                    F.col("_type") == TYPE_DONE
-                )
-                if cur >= 0:
-                    done = done.filter(F.col("kafka.offset") > cur)
-                raw = raw.join(
-                    done.select(F.col("kafka.offset").alias("__d_offset")),
-                    F.col("kafka.offset") == F.col("__d_offset"),
-                    "left_anti",
-                )
-            legs.append(raw)
+                in_window = in_window & (F.col("kafka.offset") > cur)
+            above.append(in_window)
+            legs.append(
+                pool.df(topic=topic).filter((F.col("_type") == TYPE_DATA) & in_window)
+            )
         if not legs:
             return None
-        return fuse(*legs)
+        raw = fuse(*legs)
+        if self.output_pool.is_empty():
+            return raw.withColumn(_DONE, F.lit(False))
+        any_above = above[0]
+        for pred in above[1:]:
+            any_above = any_above | pred
+        done = (
+            self.output_pool.df()
+            .filter((F.col("_type") == TYPE_DONE) & any_above)
+            .select(
+                F.col("kafka.topic").alias("__d_topic"),
+                F.col("kafka.offset").alias("__d_offset"),
+            )
+        )
+        on = (F.col("kafka.topic") == F.col("__d_topic")) & (
+            F.col("kafka.offset") == F.col("__d_offset")
+        )
+        return raw.join(done, on, "left_anti").withColumn(
+            _DONE, F.lit(False)
+        ).unionByName(raw.join(done, on, "left_semi").withColumn(_DONE, F.lit(True)))
 
     def _rule_out(self, wrapped: DataFrame, rule: Rule) -> DataFrame:
         """Evaluate a rule's `zed:` block over the wrapped scope
@@ -521,20 +527,49 @@ class EtlPipeline:
         return data, markers
 
     def build(self) -> tuple[DataFrame | None, DataFrame | None]:
-        """Returns (data rows with assigned offsets, done markers)."""
-        fresh = self._fresh_inputs()
-        if fresh is None:
-            return None, None
-        # Every rule's data AND marker branch re-derives from this one
-        # incremental window; without a persist Spark recomputes the
-        # anti-join prelude once per branch inside the commit write
-        # (2 x rules executions). The window is one batch (bounded by
-        # the incremental semantics), so MEMORY_AND_DISK is safe at any
-        # corpus size; run() unpersists after the commit.
-        from pyspark import StorageLevel  # noqa: PLC0415
+        """Returns (data rows with assigned offsets, done markers), or
+        (None, None) when every input pool is empty.
 
-        fresh = fresh.persist(StorageLevel.MEMORY_AND_DISK)
-        self._persisted = fresh
+        Materialises the run's window once: ``localCheckpoint`` plus
+        ONE aggregation, which computes the window and yields its exact
+        size and per-topic cursor candidates (``_window_stats``).  Every
+        rule's data AND marker branch reads the materialised window, so
+        the scans and the done-marker join run once per run, not once
+        per branch.  The window is one batch (bounded by the incremental
+        semantics), and the checkpoint blocks are memory-and-disk, so
+        this is safe at any corpus size; ``_release`` drops them after
+        the commit.  The trade-off of a local checkpoint: losing an
+        executor fails the run instead of recomputing it.  The commit
+        is atomic and the cursor only lags, so the rerun is still
+        exactly-once.
+
+        The rules read the not-done rows in as many partitions as the
+        scan's split size (``spark.sql.files.maxPartitionBytes``) needs
+        for their exact size: the scans split by file, so a micro-batch
+        window would otherwise run every rule branch once per scanned
+        split, tens of tasks for a few hundred rows."""
+        window = self._window_of()
+        if window is None:
+            return None, None
+        window = window.localCheckpoint(eager=False)
+        self._window = window
+        self._window_stats = {
+            row["__t"]: row
+            for row in window.groupBy(F.col("kafka.topic").alias("__t"))
+            .agg(
+                F.count(F.when(~F.col(_DONE), 1)).alias("fresh"),
+                F.max("kafka.offset").alias("mx"),
+                F.min(F.when(~F.col(_DONE), F.col("kafka.offset"))).alias("g"),
+            )
+            .collect()
+        }
+        self._fresh_rows = sum(int(s["fresh"]) for s in self._window_stats.values())
+        fresh_bytes = self._fresh_rows * window._jdf.schema().defaultSize()
+        split = int(self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+        fresh = (
+            window.filter(~F.col(_DONE)).drop(_DONE).coalesce(max(1, -(-fresh_bytes // split)))
+        )
+        self._fresh = fresh
         remaining = fresh
         prior: Column | None = None
         data_parts, marker_parts = [], []
@@ -552,27 +587,43 @@ class EtlPipeline:
             prior = masked if prior is None else (prior | masked)
         data = fuse(*data_parts)
         markers = fuse(*marker_parts)
-        data = self._assign_offsets(data)
+        data = self._assign_offsets(data, fresh_bytes)
         return data, markers
 
-    def _assign_offsets(self, data: DataFrame) -> DataFrame:
+    def _release(self) -> None:
+        """Drop the materialised window's checkpoint blocks (after
+        ``build``; frames planned from the window fail once it is
+        released)."""
+        window, self._window, self._fresh = self._window, None, None
+        if window is not None:
+            window._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+    def _assign_offsets(self, data: DataFrame, window_bytes: int) -> DataFrame:
         """Sequential per-output-topic offsets continuing from the pool's
         high-water mark (etl/pipeline.go:127-164), ordered by original
         input offset (the trailing `sort kafka.offset`, etl/build.go:107).
 
-        Strategy is assign_offsets' "auto": the per-topic window for
-        the cursor-bounded micro-batch (one task sorts one bounded
-        batch — the common case), the two-level distributed prefix sum
-        once Catalyst's size estimate says a backfill-scale batch would
-        otherwise funnel each topic through one sort reducer.  Both
-        produce bit-identical dense ranks.  Output topics come from
-        declared routes, so the prefix sum's non-null-topic
-        requirement always holds."""
-        from ..operators.offsets import assign_offsets  # noqa: PLC0415
+        The strategy follows the exact window size: ``window_bytes``
+        (the window's not-done rows times the row's default size).
+        Below PREFIX_SUM_CUTOVER_BYTES, the per-topic window (one task
+        sorts one bounded micro-batch — the common case); from it on,
+        the two-level distributed prefix sum, so a backfill-scale batch
+        does not funnel each topic through one sort reducer.  Both
+        produce bit-identical dense ranks.  Catalyst's estimate is no
+        guide here: for the denorm join it multiplies the children's
+        sizes.  Output topics come from declared routes, so the prefix
+        sum's non-null-topic requirement always holds."""
+        from ..operators.offsets import (  # noqa: PLC0415
+            PREFIX_SUM_CUTOVER_BYTES,
+            assign_offsets,
+        )
 
         base = self.output_pool.next_producer_offsets()
         return assign_offsets(
-            data, base, order_col=[_ORIG_OFFSET, _ORIG_TOPIC]
+            data,
+            base,
+            order_col=[_ORIG_OFFSET, _ORIG_TOPIC],
+            via_prefix_sum=window_bytes >= PREFIX_SUM_CUTOVER_BYTES,
         ).drop(_ORIG_OFFSET, _ORIG_TOPIC)
 
     # -- run ----------------------------------------------------------------
@@ -583,8 +634,9 @@ class EtlPipeline:
         (0 = nothing new found to ETL, cmd/zync/etl/command.go:88-90).
 
         The count rides on an ``Observation`` attached to the data
-        branch, collected during the commit write itself — one run is
-        ONE execution of the plan (no pre-count actions; per-rule
+        branch, collected during the commit write itself — no
+        ``count()`` actions: the window is materialised once by
+        ``build`` and the rules run once, inside the write (per-rule
         ``count()`` calls used to re-run the anti-join prelude and
         denorm joins once per rule before the write).  The reference's
         "ETL'd n" counts 1 data row + 1 done marker (stateless) or
@@ -604,26 +656,27 @@ class EtlPipeline:
     def _run_locked(self) -> int:
         data, markers = self.build()
         if data is None:
-            self._advance_cursors()
             return 0
+        n = 0
         try:
-            obs = Observation()
-            batch = fuse(data.observe(obs, F.count(F.lit(1)).alias("rows")), markers)
-            commit_id = self.output_pool.load_batch(batch)
-            n = 2 * int(obs.get["rows"])
+            # a window with no not-done row has nothing to ETL: no write
+            if self._fresh_rows:
+                obs = Observation()
+                batch = fuse(data.observe(obs, F.count(F.lit(1)).alias("rows")), markers)
+                commit_id = self.output_pool.load_batch(batch)
+                n = 2 * int(obs.get["rows"])
+                if n == 0:
+                    # nothing matched: retract the empty commit so
+                    # repeated polls don't litter the pool (reference
+                    # never commits an empty batch either,
+                    # etl/pipeline.go:92-99)
+                    self.output_pool.drop_commit(commit_id)
+            # Advance the low-water cursors AFTER the commit is durable
+            # (and after a retraction): the next run's scans start above
+            # them.
+            self._advance_cursors(markers if n else None)
         finally:
-            persisted = getattr(self, "_persisted", None)
-            if persisted is not None:
-                persisted.unpersist()
-                self._persisted = None
-        if n == 0:
-            # nothing matched: retract the empty commit so repeated
-            # polls don't litter the pool (reference never commits an
-            # empty batch either, etl/pipeline.go:92-99)
-            self.output_pool.drop_commit(commit_id)
-        # Advance the low-water cursors AFTER the commit is durable (and
-        # after a retraction): the next run's scans start above them.
-        self._advance_cursors()
+            self._release()
         return n
 
 

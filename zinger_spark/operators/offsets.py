@@ -35,12 +35,13 @@ def next_producer_offsets(pool: DataFrame) -> dict[str, int]:
     return {r["topic"]: int(r["offset"]) + 1 for r in rows if r["topic"] is not None}
 
 
-#: assign_offsets "auto" cutover: below this plan-estimated input size
-#: the single-shuffle window form wins (one task sorts one bounded
-#: micro-batch topic); above it the distributed prefix sum's extra
-#: exchange + materialization pays for itself.  512 MiB ~= several
-#: million envelope rows — far past the from-kafka commit threshold,
-#: squarely backfill territory.
+#: assign_offsets cutover: below this input size the single-shuffle
+#: window form wins (one task sorts one bounded micro-batch topic);
+#: above it the distributed prefix sum's extra exchange +
+#: materialization pays for itself.  512 MiB ~= several million
+#: envelope rows — far past the from-kafka commit threshold, squarely
+#: backfill territory.  "auto" compares Catalyst's estimate with it;
+#: the ETL planner compares its window's exact size.
 PREFIX_SUM_CUTOVER_BYTES = 512 * 1024 * 1024
 
 
@@ -84,8 +85,12 @@ def assign_offsets(
 
     The default ``"auto"`` picks by Catalyst's plan-time size estimate
     (PREFIX_SUM_CUTOVER_BYTES), the same statistics AQE plans from:
-    micro-batches keep the cheap window, backfills get the distributed
-    rank; unknown size falls to the prefix sum (the scale-safe side).
+    unknown size falls to the prefix sum (the scale-safe side).  The
+    estimate is only as good as the plan's statistics: over a join it
+    is the PRODUCT of the children's sizes, so a micro-batch fed by a
+    join can estimate gigabytes and take the prefix sum.  A caller that
+    knows the exact input size should pass ``via_prefix_sum`` itself
+    (the ETL planner does, from its window's row count).
     NULL topics are only grouped by the window form (the prefix sum's
     equi-join drops them; every producer in this repo assigns topics
     from declared routes, so nulls cannot occur there)."""

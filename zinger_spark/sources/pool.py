@@ -21,10 +21,17 @@ Spark mapping: one pool, two table formats, one layout each.
   Delta/Iceberg seam).  This is the format for pools at scale: topic
   and offset restrictions prune files from the recorded stats.
 
-Readers use ``mergeSchema`` so commits carrying different
-(fused-compatible) value schemas coexist, mirroring Zed's per-record
-typing.  Only this module decides where data files live: file-source
-streams over a pool take their glob from ``Pool.data_glob``.
+Commits carrying different (fused-compatible) value schemas coexist,
+mirroring Zed's per-record typing.  The table schema — the fused union
+of every live commit's schema, as a ``mergeSchema`` footer pass would
+infer it — is recorded when a commit is published: in the manifest's
+``schemas`` history for commits pools, in the log's
+``metaData.schemaString`` for txlog pools.  Readers hand it to Spark,
+so a read plans without a schema-inference job.  A manifest written
+before the history existed is backfilled once, from one ``mergeSchema``
+read under the writer lock.  Only this module decides where data files
+live: file-source streams over a pool take their glob from
+``Pool.data_glob``.
 
 Two older layouts — hive-partitioned ``_topic=T/commit-N`` dirs
 (``"partitioned": true`` in ``_pool.json``) and commit dirs with no
@@ -42,10 +49,12 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from ..datamodel import TYPE_DONE
 from ..operators.relational import ordered_batch as _ordered_batch
 from .storage import PosixStorage
+from .txlog import _fuse_schema_json
 
 POOL_KEY = "kafka.offset"
 _META = "_pool.json"
@@ -163,6 +172,7 @@ class Pool:
         commits: list[str],
         orphaned: dict[str, float] | None = None,
         asof_floor: str | None = None,
+        schemas: list[list[str]] | None = None,
     ) -> None:
         """Atomic manifest swap (tmp + rename), single-writer like the
         reference's sync processes. ``orphaned`` records WHEN each
@@ -171,13 +181,53 @@ class Pool:
         ``asof_floor`` (monotone; compact() raises it to its merged
         output) is the oldest commit name time travel may address —
         reads below it would silently miss merged-away rows, so df()
-        refuses them loudly instead."""
+        refuses them loudly instead.  ``schemas`` replaces the schema
+        history (see ``_schemas``); None keeps the current one."""
         m = {"commits": commits, "orphaned": orphaned or {}}
         prior = self._read_manifest()
         floor = max(filter(None, [prior.get("asof_floor"), asof_floor]), default=None)
         if floor is not None:
             m["asof_floor"] = floor
+        if schemas is None:
+            schemas = prior.get("schemas")
+        if schemas is not None:
+            m["schemas"] = schemas
         self._fs.write_json_atomic(self._manifest_path(), m)
+
+    def _schemas(self, m: dict) -> list[list[str]]:
+        """The manifest's schema history: ``[commit name, table schema
+        JSON]`` pairs in commit order, one per commit that widened the
+        table schema.  The schema as of commit C is the last entry at
+        or before C.
+
+        A manifest written before the history existed (live commits, no
+        ``schemas`` key) is backfilled here, once: one ``mergeSchema``
+        read over the live commits, recorded under the writer lock as
+        the schema from the oldest live commit on.  Time travel on such
+        a pool reads every commit with that schema (a column added
+        later reads as null)."""
+        if "schemas" in m or not m["commits"]:
+            return m.get("schemas", [])
+        with self.writer_lock():
+            m = self._read_manifest()
+            if "schemas" not in m:
+                commits = sorted(m["commits"])
+                inferred = (
+                    self.spark.read.option("mergeSchema", "true")
+                    .parquet(*[os.path.join(self.path, c) for c in commits])
+                    .schema
+                )
+                self._write_manifest(
+                    m["commits"], m.get("orphaned"),
+                    schemas=[[commits[0], _fuse_schema_json(None, inferred.json())]],
+                )
+                m = self._read_manifest()
+            return m["schemas"]
+
+    def _table_schema(self, m: dict, as_of: str | None = None) -> T.StructType:
+        """The recorded table schema, now or as of commit name ``as_of``."""
+        at = [s for c, s in self._schemas(m) if as_of is None or c <= as_of]
+        return T.StructType.fromJson(json.loads(at[-1]))
 
     def _commit_names(self) -> list[str]:
         """Live commit names, sorted (= commit order: ms-prefixed ids):
@@ -308,8 +358,9 @@ class Pool:
         self._fs.write_json_atomic(os.path.join(self.path, name), obj)
 
     def df(self, topic: str | None = None, as_of: str | None = None) -> DataFrame:
-        """The whole pool as a DataFrame (schema-merged across commits),
-        read as ONE parquet scan over the live commits.
+        """The whole pool as a DataFrame with the recorded table schema
+        (the fused union across commits), read as ONE parquet scan over
+        the live commits; planning it starts no Spark job.
 
         ``topic`` restricts to one topic's records: a filter on
         ``kafka.topic`` for commits pools, and on txlog pools also a
@@ -318,7 +369,8 @@ class Pool:
 
         ``as_of`` is time travel (the Delta ``versionAsOf`` analog):
         pass a commit id previously returned by ``load_batch`` and the
-        read sees only commits up to and including it — commit ids are
+        read sees only commits up to and including it, with the schema
+        recorded as of that commit — commit ids are
         millisecond-prefixed, so lexicographic order IS commit order.
         ``compact()`` raises the manifest's as-of floor to its merged
         output: travel below the floor would silently miss merged-away
@@ -342,7 +394,8 @@ class Pool:
                 raise PoolError(f"pool {self.path}: no commits at or before {as_of}")
         if not commits:
             raise PoolError(f"pool {self.path} is empty")
-        out = self._read_commits(commits)
+        cut = f"commit-{as_of}" if as_of is not None else None
+        out = self._read_commits(commits, self._table_schema(m, cut))
         if topic is not None:
             out = out.filter(F.col("kafka.topic") == topic)
         return out
@@ -389,26 +442,18 @@ class Pool:
         if not files:
             raise PoolError(f"pool {self.path} is empty")
         pruned = prune_files(files, topic=topic, offset_lo=offset_lo, offset_hi=offset_hi)
-        schema_string = snap.get("schema_string")
+        schema = self._txlog_schema(files, snap.get("schema_string"))
         if not pruned:
             # everything pruned: empty frame with the FULL pool schema
-            out = self.spark.createDataFrame(
-                [], self._txlog_schema(files, schema_string)
-            )
-        elif len(pruned) < len(files):
-            # A partially-pruned read must still carry the FULL pool
-            # schema: the schema is a union across commits, and a
-            # column living only in pruned-away files would otherwise
-            # vanish from the frame — so a resume-from-cursor read
-            # could fail analysis on a column the full read has.
-            # Explicit schema on the parquet read null-fills missing
-            # columns (standard parquet schema evolution) and pruning
-            # stays IO-only, as the docstring promises.
-            out = self.spark.read.schema(
-                self._txlog_schema(files, schema_string)
-            ).parquet(*[os.path.join(self.path, f["path"]) for f in pruned])
+            out = self.spark.createDataFrame([], schema)
         else:
-            out = self.spark.read.option("mergeSchema", "true").parquet(
+            # Every read carries the FULL pool schema from the log: the
+            # schema is a union across commits, and a column living
+            # only in pruned-away files must not vanish from a
+            # resume-from-cursor read.  The explicit schema null-fills
+            # missing columns (standard parquet schema evolution), so
+            # pruning stays IO-only, as the docstring promises.
+            out = self.spark.read.schema(schema).parquet(
                 *[os.path.join(self.path, f["path"]) for f in pruned]
             )
         if topic is not None:
@@ -495,7 +540,14 @@ class Pool:
             if not direct:
                 self._fs.rename(tmp, os.path.join(self.path, name))
             m = self._read_manifest()
-            self._write_manifest(m["commits"] + [name], m.get("orphaned"))
+            # the commit's schema joins the recorded table schema in the
+            # same manifest swap that publishes it
+            schemas = list(self._schemas(m))
+            cur = schemas[-1][1] if schemas else None
+            fused = _fuse_schema_json(cur, df.schema.json())
+            if fused != cur:
+                schemas.append([name, fused])
+            self._write_manifest(m["commits"] + [name], m.get("orphaned"), schemas=schemas)
         return commit_id
 
     def _written_rowcount_is_zero(self, root: str) -> bool:
@@ -560,6 +612,13 @@ class Pool:
                     for a in e.get("add", [])
                 ]
                 if any(e.get("commit") == name for e in entries):
+                    # the table schema from before the commit: the last
+                    # schemaString logged ahead of its entry
+                    prior = None
+                    for e in entries:
+                        if e.get("commit") == name:
+                            break
+                        prior = e.get("schema_string") or prior
                     # commit=None: a retraction is not a new commit.
                     # The retract marker makes snapshot() drop the
                     # commit from pool history entirely — it leaves
@@ -567,12 +626,17 @@ class Pool:
                     # as_of target (its files are deleted once vacuum
                     # runs, so time travel to it would hand Spark
                     # vanished paths).
-                    self._log.append(None, remove=added, retract=name)
+                    self._log.append(
+                        None, remove=added, retract=name, schema_json=prior
+                    )
             return
         with self.writer_lock():
             m = self._read_manifest()
+            # dropping the commit's history entry puts back the schema
+            # the manifest held before it
             self._write_manifest(
-                [c for c in m["commits"] if c != name], m.get("orphaned")
+                [c for c in m["commits"] if c != name], m.get("orphaned"),
+                schemas=[e for e in self._schemas(m) if e[0] != name],
             )
             d = os.path.join(self.path, name)
             if self._fs.isdir(d):
@@ -787,7 +851,8 @@ class Pool:
             kept = [n for n in old_names if n not in set(merged)]
             if len(merged) <= 1:
                 return 0  # nothing worth merging at this tier
-        snapshot = self._read_commits(merged)
+        current = self._schemas(self._read_manifest())[-1][1]
+        snapshot = self._read_commits(merged, T.StructType.fromJson(json.loads(current)))
         # range exchange gives disjoint per-file value ranges; the
         # in-partition sort tightens row-group stats within a file
         snapshot = self._cluster_for_write(
@@ -804,11 +869,13 @@ class Pool:
         # time travel below the merged output would silently miss the
         # merged-away rows (their commits leave the manifest but the
         # replacement carries a NEWER name) — raise the as-of floor so
-        # df(as_of=<older>) fails loudly instead
+        # df(as_of=<older>) fails loudly instead.  No read reaches below
+        # the floor, so the schema history collapses to one entry.
         self._write_manifest(
             kept + [f"commit-{commit_id}"],
             {**prior, **{n: now for n in merged}},
             asof_floor=f"commit-{commit_id}",
+            schemas=[[f"commit-{commit_id}", current]],
         )
         return len(merged)
 
@@ -894,7 +961,9 @@ class Pool:
             if len(merged) <= 1:
                 return 0
         paths = [os.path.join(self.path, f["path"]) for f in merged]
-        snapshot = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        snapshot = self.spark.read.schema(
+            self._txlog_schema(files, snap.get("schema_string"))
+        ).parquet(*paths)
         snapshot = self._cluster_for_write(
             snapshot, sort_by, zorder,
             input_bytes=sum(
@@ -927,10 +996,10 @@ class Pool:
         )
         return len(merged)
 
-    def _read_commits(self, commits: list[str]) -> DataFrame:
-        """Schema-merged read of a commit subset as one parquet scan
-        (``df()`` and compaction's input selector)."""
-        return self.spark.read.option("mergeSchema", "true").parquet(
+    def _read_commits(self, commits: list[str], schema: T.StructType) -> DataFrame:
+        """Read of a commit subset as one parquet scan with the recorded
+        table schema (``df()`` and compaction's input selector)."""
+        return self.spark.read.schema(schema).parquet(
             *[os.path.join(self.path, c) for c in commits]
         )
 

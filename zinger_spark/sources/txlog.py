@@ -171,21 +171,39 @@ def _flatten_minmax(minv: dict, maxv: dict, prefix: str = "") -> dict[str, list]
     return out
 
 
+def _as_nullable(dt):
+    """``dt`` with every field, array element and map value nullable —
+    what a parquet read reports whatever the writer declared."""
+    from pyspark.sql import types as T  # noqa: PLC0415
+
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 def _fuse_schema_json(cur: str | None, new: str | None) -> str | None:
     """Widened union of two Spark StructType JSON strings (the Delta
     ``schemaString``) — the table schema is the union across commits,
-    exactly what ``mergeSchema`` reads produce."""
+    exactly what ``mergeSchema`` reads produce: fields in order of
+    first appearance, everything nullable."""
     if new is None:
         return cur
-    if cur is None or cur == new or cur == _EMPTY_SCHEMA:
-        return new
     from pyspark.sql import types as T  # noqa: PLC0415
 
     from ..datamodel import fuse_type  # noqa: PLC0415
 
-    a = T.StructType.fromJson(json.loads(cur))
     b = T.StructType.fromJson(json.loads(new))
-    return fuse_type(a, b).json()
+    if cur is None or cur == _EMPTY_SCHEMA:
+        return _as_nullable(b).json()
+    a = T.StructType.fromJson(json.loads(cur))
+    return _as_nullable(fuse_type(a, b)).json()
 
 
 class TxLog:
@@ -371,13 +389,21 @@ class TxLog:
         added) keeps the Delta ``metaData.schemaString`` current: it is
         fused into the table schema and a metaData action is emitted at
         version 0 and whenever the union widens — external Delta
-        readers take the schema from metaData, not from footers."""
+        readers take the schema from metaData, not from footers.  With
+        ``retract``, ``schema_json`` is the table schema from before the
+        retracted commit and replaces the current one."""
         self._fs.makedirs(self.path)
         vs = self.versions()
         version = (vs[-1] + 1) if vs else 0
         while True:
             meta_id, cur_schema = self._last_meta(vs)
-            fused = _fuse_schema_json(cur_schema, schema_json)
+            # a retraction puts back the schema the table had before the
+            # retracted commit; every other entry widens the union
+            fused = (
+                schema_json
+                if retract is not None
+                else _fuse_schema_json(cur_schema, schema_json)
+            )
             now_ms = int(time.time() * 1000)
             lines: list[dict] = []
             if version == 0:

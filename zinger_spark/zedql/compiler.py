@@ -12,9 +12,9 @@ parent plan, joins are equi-joins on compiled key expressions.
 Scale note: an N-branch switch/fork union is N filtered instances of
 the parent plan — Spark reuses exchanges, not scans, so a cold parent
 is read up to N times.  The hot path already avoids this: EtlPipeline
-persists the incremental input window before fanning out into rules
-(planner.py `_assign_offsets` persist), and that window is the only
-thing a production switch sees.  For standalone `compile_query`
+materialises the incremental input window before fanning out into
+rules (planner.py `build`), and that window is the only thing a
+production switch sees.  For standalone `compile_query`
 programs whose fan-out input is expensive, persist the input `df`
 yourself before compiling, or accept the reference's own behavior —
 it re-scans the entire pool per output topic by design
