@@ -5650,7 +5650,9 @@ def _etl_multi_fixture(spark: SparkSession, sf: str) -> str:
     from zinger_spark.etl.planner import EtlPipeline
     from zinger_spark.sources.pool import Pool
 
-    slug = hashlib.md5((os.path.abspath(sf) + ":v1").encode()).hexdigest()[:10]
+    # the suffix versions the cached layout: v1 caches hold commit-dir
+    # pools, which no longer open
+    slug = hashlib.md5((os.path.abspath(sf) + ":v2").encode()).hexdigest()[:10]
     outdir = os.path.join(_ETL_MULTI_DIR, slug)
     staging = os.path.join(outdir, "Staging")
     if os.path.exists(os.path.join(outdir, "_DONE")):
@@ -5764,11 +5766,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # per round.  Keys that are new or were rewritten since their last
     # green check MUST sit inside that window; previously-green keys
     # rotate to the tail.  The literal below keeps its historical order;
-    # _R8_FRONT (after the literal) is the round-8 rotation applied on
-    # top: the 16 keys the driver has never sampled (all 16/16
-    # hash-exact under the judge's local replica in r7), then every key
-    # changed or added this round.  Keys pushed past 50 were all
-    # verified by full local sweeps (tools/compare.py).
+    # _R9_FRONT (after the literal) is the rotation applied on top: the
+    # chain of per-round front lists, newest first.  Keys pushed past 50
+    # were all verified by full local sweeps (tools/compare.py).
     reg = {
         # -- round 10: multi-output-topic ETL (reference-limitation lift)
         "etl_multi_output": _q_etl_multi_output,
@@ -5987,10 +5987,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {**{k: reg[k] for k in front}, **tail}
 
 
-# Round-8 driver-window rotation (see the dict-order note in queries()):
-# 16 never-driver-sampled keys first, then every key changed/added this
-# round; the window's remaining ~30 slots fall through to the head of
-# the historical order (r7-green churn insurance).
+# Driver-window rotations (see the dict-order note in queries()); the
+# window's slots left after the front list fall through to the head of
+# the historical order.
 # Round-9 driver-window rotation: the one key whose engine path changed
 # this round (offset_assign now ranks on the two-level distributed
 # prefix sum by default), then the longest-unsampled keys — everything
@@ -6135,38 +6134,6 @@ _R9_FRONT = _R10_FRONT + [
     "embedding_dup_pairs",
     "dedup_minhash_lsh",
     "tpch_q2",
-]
-
-# superseded by _R9_FRONT (kept for the round-8 record)
-_R8_FRONT = [
-    # never sampled by the driver in rounds 1-7 (judge-verified local)
-    "zq_regex_search",
-    "zq_rename_drop",
-    "zq_left_join",
-    "zq_regexp_funcs",
-    "zq_strftime_bucket",
-    "zq_flatten",
-    "zq_grok",
-    "zq_sample",
-    "zq_over_scope",
-    "lm_quality_unigram",
-    "lm_quality_bigram",
-    "gopher_quality",
-    "curation_pipeline",
-    "script_mix",
-    "simhash_dup_pairs",
-    "embedding_dup_pairs_multiprobe_scaled",
-    # changed or added in round 8
-    "avro_union_roundtrip",
-    "inverted_index_top",
-    "contamination_exact",
-    "contamination_exact_fullprobe",
-    "dedup_ngram_jaccard",
-    "quality_blend",
-    "image_dup_pairs",
-    "audio_dup_pairs",
-    "video_dup_pairs",
-    "simhash_incremental_dups",
 ]
 
 

@@ -557,8 +557,8 @@ def soak_bench(spark, n_commits: int = 520, rows_per: int = 2000) -> dict:
     base = _tempfile.mkdtemp(prefix="bench_soak_")
     out: dict = {}
     try:
-        raw = Pool.create(spark, f"{base}/Raw", table_format="txlog")
-        staging = Pool.create(spark, f"{base}/Staging", table_format="txlog")
+        raw = Pool.create(spark, f"{base}/Raw")
+        staging = Pool.create(spark, f"{base}/Staging")
         pools = {"Raw": raw, "Staging": staging}
         transform = Transform(
             inputs=[Route("T", "Raw")],
@@ -629,7 +629,7 @@ def soak_bench(spark, n_commits: int = 520, rows_per: int = 2000) -> dict:
                 )
                 compaction = {
                     "at_commit": i + 1,
-                    "merged": int(merged),  # files for txlog pools
+                    "merged": int(merged),  # files: the log's unit
                     "compact_sec": round(t1 - t0, 3),
                     "vacuum_dirs_removed": int(removed),
                     "vacuum_sec": round(time.time() - t1, 3),

@@ -80,7 +80,7 @@ def test_incremental_crawl_curation(spark, tmp_path):
         _page("https://www.siteB.com/post", "beta content two"),
         _page("https://www.siteC.com/page/", "gamma content three"),
     ])
-    pool = Pool.create(spark, str(tmp_path / "pool"), table_format="txlog")
+    pool = Pool.create(spark, str(tmp_path / "pool"))
     batch1 = _admit(_extract(spark, [b1]), pool)
     assert batch1.count() == 3  # empty pool: everything admitted
     _commit(pool, batch1, start_offset=0)

@@ -496,20 +496,13 @@ def test_concurrent_etl_drivers_serialize(spark, pools):
     assert staging_flat(pools["Staging"]) == GOLDENS[0]
 
 
-@pytest.mark.parametrize("table_format", ["commits", "txlog"])
-def test_etl_run_stream_processes_batches_continuously(
-    spark, tmp_path, table_format
-):
+def test_etl_run_stream_processes_batches_continuously(spark, pools, tmp_path):
     """Continuous ETL: the commit-arrival trigger stream drives
     incremental run()s; loading later demo batches while the stream is
     live must converge the staging pool to the same golden as the
     batch driver, with the idempotent no-op runs in between.  The
-    trigger glob comes from Pool.data_glob, so txlog pools (data under
-    data/commit-*) wake the stream too."""
-    pools = {
-        name: Pool.create(spark, str(tmp_path / name), table_format=table_format)
-        for name in ("Raw", "Staging")
-    }
+    trigger glob comes from Pool.data_glob (data under
+    data/commit-*)."""
     transform = make_transform()
     pipeline = EtlPipeline(spark, transform, lambda name: pools[name])
     counts = []
@@ -586,36 +579,6 @@ def test_cli_etl_cursor_lag_prints_metric(spark, pools, tmp_path, capsys, monkey
     out = capsys.readouterr().out
     assert rc == 0
     assert "Invoices\t1" in out
-
-
-def test_etl_demo_on_txlog_pools(spark, tmp_path):
-    """The transaction-log table format (per-file log + min/max stats,
-    sources/txlog.py) must run the same ETL to the same goldens: the
-    planner's incremental reads go through Pool.read_batch /
-    done_offsets, which prune files on recorded offset stats instead of
-    listing commit dirs."""
-    pools = {
-        "Raw": Pool.create(spark, str(tmp_path / "Raw"), table_format="txlog"),
-        "Staging": Pool.create(
-            spark, str(tmp_path / "Staging"), table_format="txlog"
-        ),
-    }
-    transform = make_transform()
-    pipeline = EtlPipeline(spark, transform, lambda name: pools[name])
-    for i, (invoices, statuses) in enumerate(BATCHES):
-        if invoices:
-            pools["Raw"].load_batch(
-                spark.createDataFrame(invoices, envelope_schema(AFTER_INV))
-            )
-        if statuses:
-            pools["Raw"].load_batch(
-                spark.createDataFrame(statuses, envelope_schema(AFTER_IS))
-            )
-        n = pipeline.run()
-        assert n == ETLD[i], f"batch {i + 1}: ETL'd {n}, want {ETLD[i]}"
-        assert staging_flat(pools["Staging"]) == GOLDENS[i], f"batch {i + 1}"
-    # idempotent re-run on the txlog layout too
-    assert pipeline.run() == 0
 
 
 # ---------------------------------------------------------------------------

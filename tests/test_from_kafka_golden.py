@@ -112,7 +112,7 @@ def test_multi_partition_resume_independent(spark, tmp_path):
     must not drag the others back to earliest."""
     from zinger_spark.kafka_admin import FakeTopicAdmin
 
-    pool = Pool.create(spark, str(tmp_path / "MP"), table_format="txlog")
+    pool = Pool.create(spark, str(tmp_path / "MP"))
     admin = FakeTopicAdmin()
     admin.create_topic("T", partitions=3)
 

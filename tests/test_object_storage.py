@@ -4,7 +4,9 @@ MemoryObjectStorage implements the storage seam with OBJECT-STORE
 semantics (flat keys, per-key atomic PUT with generations, conditional
 put/delete, prefix LIST) and none of posix's (no directories, no
 rename-in-place, no inodes, no O_EXCL).  These tests prove the Pool's
-writer lock, manifest protocol, and sidecars work against that model —
+writer lock and sidecars work against that model (the log protocol's
+own object-store test is test_pool_txlog's
+``test_txlog_protocol_on_object_storage_fake``) —
 i.e. the reference's single-writer commit-atomicity contract
 (fifo/lake.go:58-60, etl/pool.go:56-58) holds on S3/GCS-style storage,
 not just on a posix mount.  No Spark session needed: data IO is
@@ -130,25 +132,6 @@ def test_lock_timeout_against_live_holder():
                 pass
 
 
-def test_manifest_protocol_on_object_store():
-    """Manifest append + read-back + commit listing over prefix LIST:
-    the commit-visibility truth never relies on rename atomicity."""
-    fs = MemoryObjectStorage()
-    pool = _make_pool(fs)
-    assert pool._commit_names() == []
-    # simulate a published commit: data keys land under the final
-    # prefix (object stores skip the tmp+rename dance), then the
-    # manifest append is the single atomic visibility point
-    fs.write_json_atomic(f"{POOL}/commit-00000001/part-0.parquet", {})
-    pool._write_manifest(["commit-00000001"])
-    assert pool._commit_names() == ["commit-00000001"]
-    # a half-written second commit stays invisible until published
-    fs.write_json_atomic(f"{POOL}/commit-00000002/part-0.parquet", {})
-    assert pool._commit_names() == ["commit-00000001"]
-    pool._write_manifest(["commit-00000001", "commit-00000002"])
-    assert pool._commit_names() == ["commit-00000001", "commit-00000002"]
-
-
 def test_sidecars_on_object_store():
     fs = MemoryObjectStorage()
     pool = _make_pool(fs)
@@ -157,15 +140,3 @@ def test_sidecars_on_object_store():
     assert pool.read_sidecar("_cursor.json") == {"T": 7}
     pool.write_sidecar("_cursor.json", {"T": 9})
     assert pool.read_sidecar("_cursor.json") == {"T": 9}
-
-
-def test_commit_publish_rename_maps_to_copy_delete():
-    """The posix commit path (tmp dir + rename) still works verbatim on
-    the object backend via server-side copy+delete — so Pool logic is
-    backend-agnostic even before a backend chooses the direct-write
-    layout."""
-    fs = MemoryObjectStorage()
-    fs.write_json_atomic(f"{POOL}/.tmp-1/part-0.parquet", {"rows": 1})
-    fs.rename(f"{POOL}/.tmp-1", f"{POOL}/commit-00000001")
-    assert not fs.exists(f"{POOL}/.tmp-1")
-    assert fs.read_json(f"{POOL}/commit-00000001/part-0.parquet") == {"rows": 1}

@@ -1,7 +1,7 @@
-"""Pool layer tests for the commits format: atomic commits, schema
-merge, offsets, the manifest as the one record of live commits,
-compaction, vacuum, and refusal of the layouts the pool no longer
-reads (the txlog format is covered in test_pool_txlog.py)."""
+"""Pool layer tests: atomic commits, schema merge, offsets, time
+travel, compaction, vacuum, the writer lock, and refusal of the
+layouts the pool no longer reads.  The transaction log itself (stats,
+pruning, checkpoints, Delta interop) is covered in test_pool_txlog.py."""
 
 from __future__ import annotations
 
@@ -45,17 +45,16 @@ def test_atomic_commit_and_merge(spark, tmp_path):
 
 
 def test_full_read_single_scan(spark, tmp_path):
-    """Every read of a commits pool — full, as-of subset, topic-scoped
-    and after compaction — is ONE FileScan over the live commit dirs,
-    regardless of commit count, and vacuum reclaims the merged-away
-    commits."""
+    """Every read of a pool — full, as-of subset, topic-scoped and
+    after compaction — is ONE FileScan over the live files, regardless
+    of commit count, and vacuum reclaims the merged-away files."""
     pool = Pool.create(spark, str(tmp_path / "ssp"))
     mid = None
     for i in range(6):
         cid = pool.load_batch(
             spark.createDataFrame(
                 env_rows("A", [2 * i]) + env_rows("B", [2 * i + 1]), _schema()
-            )
+            ).coalesce(1)
         )
         if i == 2:
             mid = cid
@@ -109,23 +108,23 @@ def test_partitioned_layout_refused(spark, tmp_path):
     assert Pool(spark, str(path)).df().count() == 1
 
 
-def test_missing_manifest_refused(spark, tmp_path):
-    """A commits pool without _manifest.json is refused on open: the
-    manifest is the only record of which commit dirs are live, so
-    listing the dirs instead could publish crashed or merged-away
-    commits."""
-    import os
-
-    pool = Pool.create(spark, str(tmp_path / "nm"))
-    pool.load_batch(spark.createDataFrame(env_rows("T", [0, 1]), _schema()))
-    os.remove(os.path.join(pool.path, "_manifest.json"))
-    with pytest.raises(PoolError, match="_manifest.json"):
-        Pool(spark, pool.path)
-    # a handle opened before the manifest vanished refuses too
-    with pytest.raises(PoolError, match="_manifest.json"):
-        pool.df()
-    with pytest.raises(PoolError, match="_manifest.json"):
-        pool.is_empty()
+def test_commits_format_refused(spark, tmp_path):
+    """A pool in the removed commit-dir format (flat commit dirs
+    published by _manifest.json) is refused on open with the cause
+    named, never read as an empty pool that hides its data."""
+    path = tmp_path / "cd"
+    commit = path / "commit-0000000000001-00000000"
+    spark.createDataFrame(env_rows("T", [0, 1]), _schema()).write.parquet(str(commit))
+    (path / "_manifest.json").write_text(
+        json.dumps({"commits": [commit.name], "orphaned": {}})
+    )
+    meta = {"key": "kafka.offset", "order": "asc"}
+    for recorded in ({**meta, "format": "commits"}, meta):
+        (path / "_pool.json").write_text(json.dumps(recorded))
+        with pytest.raises(PoolError, match="commit-dir"):
+            Pool(spark, str(path))
+    # what create() writes opens
+    assert Pool.create(spark, str(tmp_path / "new")).meta["format"] == "txlog"
 
 
 def test_read_batch_ordered(spark, tmp_path):
@@ -135,36 +134,48 @@ def test_read_batch_ordered(spark, tmp_path):
     assert out == [3, 5, 7]
 
 
+def _live_files(pool):
+    """Absolute paths of the files live in the pool's log."""
+    return sorted(os.path.join(pool.path, p) for p in pool._log.snapshot()["files"])
+
+
+def _data_files(pool):
+    """Absolute paths of every parquet file under the pool's data dir."""
+    import glob as _glob
+
+    return sorted(_glob.glob(os.path.join(pool.path, "data", "commit-*", "*.parquet")))
+
+
 def test_compact_preserves_contents(spark, tmp_path):
     pool = Pool.create(spark, str(tmp_path / "c"))
-    for batch in ([0, 1], [2], [3, 4]):
-        pool.load_batch(spark.createDataFrame(env_rows("T", batch), _schema()))
+    c1 = pool.load_batch(spark.createDataFrame(env_rows("T", [0, 1]), _schema()).coalesce(1))
+    for batch in ([2], [3, 4]):
+        pool.load_batch(spark.createDataFrame(env_rows("T", batch), _schema()).coalesce(1))
     before = sorted(r["kafka"]["offset"] for r in pool.df().collect())
     assert pool.compact() == 3
-    import os
-    # manifest points at the single merged commit; the pre-compact dirs
-    # stay on disk (readers-safe swap) until vacuum's grace lapses
-    assert len(pool._commit_dirs()) == 1
-    on_disk = [d for d in os.listdir(pool.path) if d.startswith("commit-")]
+    # the log lists the one merged file; the merged-away files stay on
+    # disk (readers mid-scan keep them) until vacuum's grace lapses
+    assert len(_live_files(pool)) == 1
+    on_disk = _data_files(pool)
     assert len(on_disk) == 4
     after = sorted(r["kafka"]["offset"] for r in pool.df().collect())
     assert after == before == [0, 1, 2, 3, 4]
     assert pool.next_consumer_offset("T") == 5
-    # within grace: nothing reclaimed — even when the commit DIRS are
-    # old, because grace runs from ORPHANING time (manifest swap), not
-    # the write mtime (backdate the dirs to prove it)
+    with pytest.raises(PoolError, match="predates compaction"):
+        pool.df(as_of=c1)
+    # within grace: nothing reclaimed — even when the FILES are old,
+    # because grace runs from their removal from the log, not the
+    # write mtime (backdate the files to prove it)
     import time as _time
 
-    for d in on_disk:
-        full = f"{pool.path}/{d}"
+    for full in on_disk:
         _time_ago = _time.time() - 7200
         os.utime(full, (_time_ago, _time_ago))
     assert pool.vacuum(grace_seconds=3600) == 0
     assert pool.vacuum(grace_seconds=0) == 3
-    on_disk = [d for d in os.listdir(pool.path) if d.startswith("commit-")]
-    assert len(on_disk) == 1
+    assert _data_files(pool) == _live_files(pool)
     assert sorted(r["kafka"]["offset"] for r in pool.df().collect()) == before
-    # post-compact appends keep flowing through the manifest
+    # post-compact appends keep flowing through the log
     pool.load_batch(spark.createDataFrame(env_rows("T", [5]), _schema()))
     assert pool.next_consumer_offset("T") == 6
 
@@ -180,67 +191,8 @@ def test_time_travel_as_of(spark, tmp_path):
     assert pool.df(as_of=c3).count() == 5
     # offsets visible at c2 stop at 2
     assert pool.df(as_of=c2).agg(F.max("kafka.offset")).first()[0] == 2
-    with pytest.raises(PoolError):
+    with pytest.raises(PoolError, match="no commits at or before"):
         pool.df(as_of="0000000000000-deadbeef")
-
-
-def test_vacuum_reclaims_tmp_dirs(spark, tmp_path):
-    """'.tmp-*' leftovers from a write that crashed between the Spark
-    write and os.rename are never manifest-referenced; vacuum reclaims
-    them on the mtime clock alongside orphaned commits."""
-    import os
-
-    pool = Pool.create(spark, str(tmp_path / "vt"))
-    pool.load_batch(spark.createDataFrame(env_rows("T", [0, 1]), _schema()))
-    junk = os.path.join(pool.path, ".tmp-crashed-write")
-    os.makedirs(junk)
-    with open(os.path.join(junk, "part-0.parquet"), "wb") as f:
-        f.write(b"partial")
-    assert pool.vacuum(grace_seconds=3600) == 0  # inside grace: protected
-    assert os.path.isdir(junk)
-    # tmp dirs share the unpublished floor: an in-flight writer's tmp
-    # must survive an aggressive orphan grace
-    assert pool.vacuum(grace_seconds=0) == 0
-    assert os.path.isdir(junk)
-    assert pool.vacuum(grace_seconds=0, unpublished_grace_seconds=0) == 1
-    assert not os.path.exists(junk)
-    assert pool.df().count() == 2  # live commit untouched
-
-
-def test_writer_lock_prevents_manifest_lost_update(spark, tmp_path):
-    """Two writers appending commits concurrently must both land in the
-    manifest: without the writer lock the read-modify-write interleaves
-    and one commit silently vanishes from the live list."""
-    import threading
-
-    from zinger_spark.sources.pool import Pool
-
-    pool = Pool.create(spark, str(tmp_path / "race"))
-    df = spark.range(3).selectExpr(
-        "named_struct('topic', 'T', 'partition', 0L, 'offset', id) AS kafka",
-        "'data' AS _type",
-    )
-    errs = []
-
-    def writer():
-        try:
-            # separate Pool handle per writer: contend on the FILE lock,
-            # as two driver processes would
-            own = Pool(spark, pool.path)
-            for _ in range(4):
-                own.load_batch(df)
-        except Exception as e:  # noqa: BLE001
-            errs.append(e)
-
-    threads = [threading.Thread(target=writer) for _ in range(2)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errs
-    manifest = pool._read_manifest()
-    assert len(manifest["commits"]) == 8
-    assert pool.df().count() == 8 * 3
 
 
 def test_writer_lock_reentrant_and_times_out(spark, tmp_path):
@@ -321,102 +273,58 @@ def test_cli_compact_and_vacuum_pool(spark, tmp_path, capsys, monkeypatch):
     df = spark.range(3).selectExpr(
         "named_struct('topic', 'T', 'partition', 0L, 'offset', id) AS kafka",
         "'data' AS _type",
-    )
+    ).coalesce(1)
     for _ in range(3):
         pool.load_batch(df)
     monkeypatch.setattr(climod, "_spark", lambda a: spark)
     rc = climod.main(["compact-pool", "P", "--lake", str(tmp_path)])
     assert rc == 0
-    assert "compacted 3 commits" in capsys.readouterr().out
+    assert "compacted 3 files" in capsys.readouterr().out
     assert pool.df().count() == 9  # rows preserved across the swap
     rc = climod.main(
         ["vacuum-pool", "P", "--lake", str(tmp_path), "--grace-seconds", "0"]
     )
     assert rc == 0
-    assert "removed 3 dirs" in capsys.readouterr().out
+    assert "removed 3 files" in capsys.readouterr().out
     assert pool.df().count() == 9
 
 
-from zinger_spark.sources.storage import PosixStorage
-
-
-class _ObjectStoreLikePosix(PosixStorage):
-    """Posix IO with an object store's cost model declared — exercises
-    the rename-free direct-commit path with real Spark parquet IO."""
-
-    rename_is_copy = True
-
-
-def test_direct_commit_skips_rename(spark, tmp_path, monkeypatch):
-    """rename_is_copy backends write flat-pool data straight to the
-    final commit prefix: no .tmp- dir is ever created, rename() is
-    never called, and the commit is invisible until the manifest
-    append publishes it."""
-    fs = _ObjectStoreLikePosix()
-
-    def no_rename(src, dst):
-        raise AssertionError(f"rename called on rename_is_copy backend: {src}")
-
-    monkeypatch.setattr(fs, "rename", no_rename)
-    pool = Pool.create(spark, str(tmp_path / "p"), storage=fs)
-    cid = pool.load_batch(spark.createDataFrame(env_rows("T", [0, 1]), _schema()))
-    assert pool.df().count() == 2
-    names = set(fs.listdir(str(tmp_path / "p")))
-    assert f"commit-{cid}" in names
-    assert not any(n.startswith(".tmp-") for n in names)
-
-
-def test_direct_commit_unpublished_invisible_and_vacuumed(spark, tmp_path):
-    """A crash between the direct write and the manifest append leaves
-    an unpublished commit dir: readers never see it (manifest is the
-    truth) and vacuum reclaims it on the mtime clock."""
-    fs = _ObjectStoreLikePosix()
-    pool = Pool.create(spark, str(tmp_path / "p"), storage=fs)
-    pool.load_batch(spark.createDataFrame(env_rows("T", [0]), _schema()))
-
-    # simulate the crashed writer: data at its final prefix, no publish
-    orphan = str(tmp_path / "p" / "commit-9999999999999-deadbeef")
-    spark.createDataFrame(env_rows("T", [7]), _schema()).write.parquet(orphan)
-    assert pool.df().count() == 1  # unpublished commit invisible
-    assert pool.next_producer_offsets() == {"T": 1}
-
-    # default grace refuses to touch it: an unpublished dir is
-    # indistinguishable from an IN-FLIGHT direct commit
-    assert pool.vacuum(grace_seconds=0.0) == 0
-    assert fs.isdir(orphan)
-    # explicit writer-quiescent override reclaims it
-    assert pool.vacuum(grace_seconds=0.0, unpublished_grace_seconds=0.0) == 1
-    assert not fs.isdir(orphan)
-    assert pool.df().count() == 1
+def _file_size(pool, commit_id):
+    """Logged byte size of a one-file commit's file."""
+    (f,) = [
+        f for p, f in pool._log.snapshot()["files"].items()
+        if f"commit-{commit_id}" in p
+    ]
+    return f["size"]
 
 
 def test_size_tiered_compact_merges_only_small_commits(spark, tmp_path):
-    """compact(small_bytes): small commits merge into one, big commits
-    stay untouched (never rewritten), data and offsets are preserved,
-    and the merged-away names move to the orphan record for vacuum."""
+    """compact(small_bytes): files smaller than the threshold (sizes
+    from the log) merge into one, big files stay untouched (never
+    rewritten), data and offsets are preserved, and the merged-away
+    files are logged as removed for vacuum."""
     pool = Pool.create(spark, str(tmp_path / "p"))
     # one big commit (500 rows) and three tiny ones (1 row each)
-    pool.load_batch(
-        spark.createDataFrame(env_rows("T", list(range(500))), _schema())
+    big_id = pool.load_batch(
+        spark.createDataFrame(env_rows("T", list(range(500))), _schema()).coalesce(1)
     )
     for o in (500, 501, 502):
-        pool.load_batch(spark.createDataFrame(env_rows("T", [o]), _schema()))
-    before = pool._commit_names()
+        pool.load_batch(spark.createDataFrame(env_rows("T", [o]), _schema()).coalesce(1))
+    before = set(pool._log.snapshot()["files"])
     assert len(before) == 4
-    big = before[0]
-    big_size = pool._commit_size(big)
+    (big,) = [p for p in before if f"commit-{big_id}" in p]
+    big_size = _file_size(pool, big_id)
 
     merged = pool.compact(small_bytes=big_size)  # tiny < big's size
     assert merged == 3
-    after = pool._commit_names()
-    assert big in after and len(after) == 2  # big + merged survivor
+    snap = pool._log.snapshot()
+    assert big in snap["files"] and len(snap["files"]) == 2  # big + merged
     assert pool.df().count() == 503
     assert pool.next_producer_offsets() == {"T": 503}
-    orphans = pool._read_manifest()["orphaned"]
-    assert set(before[1:]) <= set(orphans)
+    assert before - {big} <= set(snap["removed_ts"])
     # another pass at the same tier: nothing left worth merging
     assert pool.compact(small_bytes=big_size) == 0
-    # vacuum reclaims the merged-away dirs after grace
+    # vacuum reclaims the merged-away files after grace
     assert pool.vacuum(grace_seconds=0.0) == 3
 
 
@@ -426,13 +334,13 @@ def test_as_of_below_compaction_floor_errors_loudly(spark, tmp_path):
     df(as_of=...) must refuse instead (review finding r7)."""
     pool = Pool.create(spark, str(tmp_path / "p"))
     a = pool.load_batch(
-        spark.createDataFrame(env_rows("T", list(range(300))), _schema())
+        spark.createDataFrame(env_rows("T", list(range(300))), _schema()).coalesce(1)
     )
-    b = pool.load_batch(spark.createDataFrame(env_rows("T", [300]), _schema()))
-    c = pool.load_batch(spark.createDataFrame(env_rows("T", [301]), _schema()))
+    b = pool.load_batch(spark.createDataFrame(env_rows("T", [300]), _schema()).coalesce(1))
+    c = pool.load_batch(spark.createDataFrame(env_rows("T", [301]), _schema()).coalesce(1))
     assert pool.df(as_of=a).count() == 300  # pre-compact travel works
     # merge the two small commits (b, c); big commit a stays
-    assert pool.compact(small_bytes=pool._commit_size(f"commit-{a}")) == 2
+    assert pool.compact(small_bytes=_file_size(pool, a)) == 2
     with pytest.raises(PoolError, match="predates compaction"):
         pool.df(as_of=a)
     with pytest.raises(PoolError, match="predates compaction"):
@@ -444,15 +352,13 @@ def test_compact_sort_by_clusters_files(spark, tmp_path):
     """compact(sort_by=...) range-clusters the merged commit: per-file
     min/max on the cluster column are disjoint, so a later filter on it
     skips whole files via parquet footer stats (the ZORDER analog)."""
-    import glob as _glob
-
     import pyarrow.parquet as _pq
 
     pool = Pool.create(spark, str(tmp_path / "z"))
     # three commits with interleaved value.a so ingest order is
     # maximally anti-clustered for the a column
     for batch in ([0, 3, 6, 9], [1, 4, 7, 10], [2, 5, 8, 11]):
-        pool.load_batch(spark.createDataFrame(env_rows("T", batch), _schema()))
+        pool.load_batch(spark.createDataFrame(env_rows("T", batch), _schema()).coalesce(1))
     before = sorted(r["kafka"]["offset"] for r in pool.df().collect())
     # tiny target so the 12-row pool still spreads over several
     # files (default 128 MiB target would rightly coalesce to one)
@@ -461,10 +367,8 @@ def test_compact_sort_by_clusters_files(spark, tmp_path):
     after = sorted(r["kafka"]["offset"] for r in pool.df().collect())
     assert after == before  # clustering reorders, never drops
 
-    commit = pool._commit_dirs()[0]
-    files = sorted(_glob.glob(f"{commit}/*.parquet"))
     ranges = []
-    for f in files:
+    for f in _live_files(pool):
         md = _pq.read_metadata(f)
         mins, maxs = [], []
         for rg in range(md.num_row_groups):
@@ -492,79 +396,4 @@ def test_compact_sort_by_cli(spark, tmp_path):
         ["compact-pool", "k", "--lake", str(tmp_path), "--sort-by", "value.a"]
     )
     assert rc == 0
-    assert len(pool._commit_dirs()) == 1
-
-
-def _assert_schema_parity(spark, pool):
-    """The recorded table schema, and what ``df()`` reads with, equal
-    what a ``mergeSchema`` footer pass infers over the live commits."""
-    live = [os.path.join(pool.path, c) for c in pool._commit_names()]
-    inferred = spark.read.option("mergeSchema", "true").parquet(*live).schema
-    assert pool._table_schema(pool._read_manifest()) == inferred
-    assert pool.df().schema == inferred
-
-
-def test_recorded_schema_matches_merge_schema(
-    spark, tmp_path, evolving_batches, jobs_started
-):
-    """The manifest records the fused table schema at every commit, so
-    reads plan with no schema-inference job.  Over evolving nested
-    values the record equals what mergeSchema infers over the live
-    commits after each load_batch, after a dropped commit (the schema
-    from before it comes back), on a manifest written before the record
-    existed (backfilled once) and after compaction."""
-    path = str(tmp_path / "evo")
-    pool = Pool.create(spark, path)
-    cids = []
-    for batch in evolving_batches:
-        cids.append(pool.load_batch(batch))
-        _assert_schema_parity(spark, pool)
-    value = pool.df().schema["value"].dataType
-    assert value.fieldNames() == ["a", "b", "c", "d", "e"]
-    assert value["d"].dataType.fieldNames() == ["x", "y"]
-
-    # a commit that widens the schema, then is taken back
-    wide = T.StructType.fromDDL(
-        "kafka struct<topic:string,partition:bigint,offset:bigint>, "
-        "key string, value struct<a:bigint,z:string>, _type string"
-    )
-    cid = pool.load_batch(spark.createDataFrame([(("T", 0, 5), None, (5, "w"), "data")], wide))
-    _assert_schema_parity(spark, pool)
-    assert "z" in pool.df().schema["value"].dataType.fieldNames()
-    pool.drop_commit(cid)
-    _assert_schema_parity(spark, pool)
-    assert "z" not in pool.df().schema["value"].dataType.fieldNames()
-
-    # time travel reads with the schema recorded as of its commit
-    first_two = [os.path.join(path, c) for c in pool._commit_names()[:2]]
-    assert (
-        pool.df(as_of=cids[1]).schema
-        == spark.read.option("mergeSchema", "true").parquet(*first_two).schema
-    )
-
-    # planning a read starts no Spark job
-    def plan_reads():
-        pool.df().schema
-        pool.df(topic="T").schema
-        pool.df(as_of=cids[2]).schema
-        pool.read_batch("T", 1, 10).schema
-
-    assert jobs_started(plan_reads) == 0
-
-    # a manifest without the record: the first read backfills it once
-    manifest = os.path.join(path, "_manifest.json")
-    with open(manifest) as f:
-        m = json.load(f)
-    del m["schemas"]
-    with open(manifest, "w") as f:
-        json.dump(m, f)
-    reopened = Pool(spark, path)
-    assert jobs_started(lambda: reopened.df().schema) >= 1
-    with open(manifest) as f:
-        assert "schemas" in json.load(f)
-    _assert_schema_parity(spark, reopened)
-    assert jobs_started(lambda: reopened.df().schema) == 0
-
-    assert reopened.compact() == len(evolving_batches)
-    _assert_schema_parity(spark, reopened)
-    assert reopened.df().count() == 7
+    assert len(_live_files(pool)) == 1

@@ -1,7 +1,8 @@
-"""Transaction-log (Delta/Iceberg-seam) pool format tests: the pool
-surface (load/read/compact/vacuum/time-travel) behaves identically to
-the commit-dir format, while visibility is a per-file log append and
-scoped reads prune files driver-side on recorded min/max stats."""
+"""Transaction-log (Delta wire format) tests: visibility is a per-file
+log append, scoped reads prune files driver-side on recorded min/max
+stats, the offset bookkeeping answers from those stats, and the log
+interoperates with external Delta readers and writers (checkpoints
+included).  The pool surface itself is covered in test_pool.py."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from zinger_spark.sources.pool import Pool, PoolError
@@ -27,60 +27,8 @@ def _schema():
     )
 
 
-def _mk(spark, tmp_path, name="p", fmt="txlog"):
-    return Pool.create(spark, str(tmp_path / name), table_format=fmt)
-
-
-# -- format-parity: the same behavioral contract under both layouts ------
-
-
-@pytest.mark.parametrize("fmt", ["commits", "txlog"])
-def test_commit_merge_and_offsets_both_formats(spark, tmp_path, fmt):
-    pool = _mk(spark, tmp_path, fmt=fmt)
-    pool.load_batch(spark.createDataFrame(env_rows("T", [0, 1]), _schema()))
-    wider = T.StructType.fromDDL(
-        "kafka struct<topic:string,partition:bigint,offset:bigint>, "
-        "key string, value struct<a:bigint,b:string>, _type string"
-    )
-    pool.load_batch(
-        spark.createDataFrame([(("T", 0, 2), None, (30, "x"), "data")], wider)
-    )
-    df = pool.df()
-    assert df.count() == 3
-    assert "b" in df.schema["value"].dataType.fieldNames()
-    assert pool.next_consumer_offset("T") == 3
-    assert pool.next_producer_offsets() == {"T": 3}
-
-
-@pytest.mark.parametrize("fmt", ["commits", "txlog"])
-def test_read_batch_ordered_both_formats(spark, tmp_path, fmt):
-    pool = _mk(spark, tmp_path, fmt=fmt)
-    pool.load_batch(spark.createDataFrame(env_rows("T", [5, 3, 9, 4]), _schema()))
-    got = [r["kafka"]["offset"] for r in pool.read_batch("T", 4, 2).collect()]
-    assert got == [4, 5]
-
-
-@pytest.mark.parametrize("fmt", ["commits", "txlog"])
-def test_time_travel_both_formats(spark, tmp_path, fmt):
-    pool = _mk(spark, tmp_path, fmt=fmt)
-    c1 = pool.load_batch(spark.createDataFrame(env_rows("T", [0]), _schema()))
-    pool.load_batch(spark.createDataFrame(env_rows("T", [1]), _schema()))
-    assert pool.df(as_of=c1).count() == 1
-    assert pool.df().count() == 2
-    with pytest.raises(PoolError, match="no commits at or before"):
-        pool.df(as_of="0000000000000-00000000")
-
-
-@pytest.mark.parametrize("fmt", ["commits", "txlog"])
-def test_compact_preserves_contents_and_floors_time_travel(spark, tmp_path, fmt):
-    pool = _mk(spark, tmp_path, fmt=fmt)
-    c1 = pool.load_batch(spark.createDataFrame(env_rows("T", [0, 1]), _schema()))
-    pool.load_batch(spark.createDataFrame(env_rows("T", [2, 3]), _schema()))
-    before = sorted(r["kafka"]["offset"] for r in pool.df().collect())
-    assert pool.compact() >= 2
-    assert sorted(r["kafka"]["offset"] for r in pool.df().collect()) == before
-    with pytest.raises(PoolError, match="predates compaction"):
-        pool.df(as_of=c1)
+def _mk(spark, tmp_path, name="p"):
+    return Pool.create(spark, str(tmp_path / name))
 
 
 def test_txlog_drop_commit_retracts(spark, tmp_path):
@@ -112,14 +60,26 @@ def test_txlog_records_file_stats(spark, tmp_path):
 
 def test_txlog_visibility_is_log_append_not_files(spark, tmp_path):
     """Data files on disk but not in the log are invisible (a crashed
-    pre-append write) — the log append is the only visibility point."""
+    pre-append write) — the log append is the only visibility point.
+    Vacuum reclaims them on the mtime clock, but only under the
+    unpublished grace: an IN-FLIGHT commit looks exactly like a crashed
+    one until its log append lands."""
     pool = _mk(spark, tmp_path)
-    pool.load_batch(spark.createDataFrame(env_rows("T", [0]), _schema()))
+    pool.load_batch(spark.createDataFrame(env_rows("T", [0]), _schema()).coalesce(1))
     # simulate a crashed writer: bytes on disk, no log entry
     dark = os.path.join(pool.path, "data", "commit-9999999999999-deadbeef")
-    spark.createDataFrame(env_rows("T", [99]), _schema()).write.parquet(dark)
+    spark.createDataFrame(env_rows("T", [99]), _schema()).coalesce(1).write.parquet(dark)
     assert pool.df().count() == 1  # dark file not visible
     assert pool.next_consumer_offset("T") == 1
+    assert pool.next_producer_offsets() == {"T": 1}
+    # an aggressive reader grace leaves it alone: the unpublished grace
+    # floors at max(grace, 1h)
+    assert pool.vacuum(grace_seconds=0.0) == 0
+    assert os.path.isdir(dark)
+    # the explicit writer-quiescent override reclaims it, dir and all
+    assert pool.vacuum(grace_seconds=0.0, unpublished_grace_seconds=0.0) == 1
+    assert not os.path.exists(dark)
+    assert pool.df().count() == 1
 
 
 def test_txlog_prune_files_on_stats():
@@ -147,7 +107,7 @@ def test_txlog_read_batch_prunes_old_files(spark, tmp_path):
                 env_rows("T", list(range(lo, lo + 10))), _schema()
             ).coalesce(1)
         )
-    batch = pool._df_txlog(topic="T", offset_lo=205)
+    batch = pool.df(topic="T", offset_lo=205)
     # the physical scan should reference exactly ONE parquet file
     files = [
         f for f in batch.inputFiles() if f.endswith(".parquet")
@@ -213,7 +173,8 @@ def test_txlog_protocol_on_object_storage_fake():
     """The log protocol is object-store-clean: version claims are
     conditional PUTs (one winner), entries replay from prefix LIST, no
     rename or posix directory anywhere.  Metadata-only, like the
-    manifest's object-store suite — Spark owns data-file IO."""
+    writer-lock suite in test_object_storage — Spark owns data-file
+    IO."""
     from zinger_spark.sources.storage import MemoryObjectStorage
 
     fs = MemoryObjectStorage()
@@ -326,21 +287,21 @@ def test_txlog_partial_prune_keeps_full_schema(spark, tmp_path):
         spark.createDataFrame([(("T", 0, 0), None, (0, "x"), "data")], wider)
     )
     pool.load_batch(spark.createDataFrame(env_rows("T", [100, 101]), _schema()))
-    out = pool._df_txlog(topic="T", offset_lo=100)
+    out = pool.df(topic="T", offset_lo=100)
     # the wide file was really pruned (only 2 rows scanned)...
     assert out.count() == 2
     # ...but the schema is still the pool union, null-filled
     assert "b" in out.schema["value"].dataType.fieldNames()
     assert [r["value"]["b"] for r in out.collect()] == [None, None]
     # everything-pruned branch agrees
-    empty = pool._df_txlog(topic="T", offset_lo=10_000)
+    empty = pool.df(topic="T", offset_lo=10_000)
     assert empty.count() == 0
     assert "b" in empty.schema["value"].dataType.fieldNames()
 
 
 def test_txlog_retracted_commit_leaves_history(spark, tmp_path):
-    """drop_commit must remove the commit from pool history (like the
-    manifest format's delete) and reject it as an as_of target — after
+    """drop_commit must remove the commit from pool history and reject
+    it as an as_of target — after
     vacuum its files are gone, so time travel to it would hand Spark
     vanished paths (ADVICE r8)."""
     pool = _mk(spark, tmp_path)
@@ -357,17 +318,20 @@ def test_txlog_retracted_commit_leaves_history(spark, tmp_path):
 def test_txlog_empty_batch_is_noop(spark, tmp_path):
     """An all-empty batch (normal from an empty streaming micro-batch)
     must not log a zero-file commit: the pool behaves as if no commit
-    happened (ADVICE r8)."""
+    happened (ADVICE r8) — no hollow commit, no flip of is_empty()."""
     pool = _mk(spark, tmp_path)
     log = TxLog(pool._fs, pool.path)
     pool.load_batch(spark.createDataFrame([], _schema()))
     assert pool.is_empty()
     assert log.versions() == []
+    with pytest.raises(PoolError, match="empty"):
+        pool.df()
     # on a non-empty pool: history and offsets unchanged by the no-op
     pool.load_batch(spark.createDataFrame(env_rows("T", [0, 1]), _schema()))
-    before = log.versions()
+    before, commits_before = log.versions(), pool._commit_names()
     pool.load_batch(spark.createDataFrame([], _schema()))
     assert log.versions() == before
+    assert pool._commit_names() == commits_before
     assert pool.next_producer_offsets() == {"T": 2}
 
 
@@ -672,8 +636,11 @@ def test_txlog_two_threads_no_lost_commit(spark, tmp_path):
 
     def worker(lo):
         try:
+            # separate Pool handle per writer: contend on the FILE lock,
+            # as two driver processes would
+            own = Pool(spark, pool.path)
             for o in range(lo, lo + 8):
-                pool.load_batch(
+                own.load_batch(
                     spark.createDataFrame(env_rows("T", [o]), _schema()).coalesce(1)
                 )
         except Exception as e:  # noqa: BLE001
@@ -690,26 +657,8 @@ def test_txlog_two_threads_no_lost_commit(spark, tmp_path):
     log = TxLog(pool._fs, pool.path)
     vs = log.versions()
     assert vs == list(range(len(vs)))  # contiguous claims, no lost slots
+    assert len(pool._commit_names()) == 16
     assert pool.next_consumer_offset("T") == 108
-
-
-def test_commitdir_empty_batch_is_noop_format_parity(spark, tmp_path):
-    """r9 review: the empty-batch no-op existed only on the txlog side,
-    so the same op sequence diverged between the two formats (commits
-    minted a hollow zero-row commit and flipped is_empty()).  Both
-    formats now treat an all-empty batch as 'no commit happened'."""
-    for fmt in ("commits", "txlog"):
-        pool = _mk(spark, tmp_path, name=f"eb_{fmt}", fmt=fmt)
-        pool.load_batch(spark.createDataFrame([], _schema()))
-        assert pool.is_empty(), fmt
-        with pytest.raises(PoolError, match="empty"):
-            pool.df()
-        # and on a non-empty pool: history + offsets unchanged
-        pool.load_batch(spark.createDataFrame(env_rows("T", [0]), _schema()))
-        commits_before = pool._commit_names()
-        pool.load_batch(spark.createDataFrame([], _schema()))
-        assert pool._commit_names() == commits_before, fmt
-        assert pool.next_producer_offsets() == {"T": 1}, fmt
 
 
 def test_legacy_log_layout_refused(spark, tmp_path):
@@ -755,11 +704,11 @@ def _assert_txlog_schema_parity(spark, pool):
 def test_txlog_recorded_schema_matches_merge_schema(
     spark, tmp_path, evolving_batches, jobs_started
 ):
-    """txlog twin of test_pool's schema-record test: the log's
-    schemaString equals what mergeSchema infers over the live files
-    after each load_batch, after a retracted commit (the retraction
-    puts back the schema from before it) and after compaction; reads
-    plan with no Spark job."""
+    """The log's schemaString equals what mergeSchema infers over the
+    live files after each load_batch, after a retracted commit (the
+    retraction puts back the schema from before it) and after
+    compaction; time travel reads with the schema as of its commit;
+    reads plan with no Spark job."""
     pool = _mk(spark, tmp_path)
     cids = []
     for batch in evolving_batches:
@@ -780,6 +729,16 @@ def test_txlog_recorded_schema_matches_merge_schema(
     _assert_txlog_schema_parity(spark, pool)
     assert "z" not in pool.df().schema["value"].dataType.fieldNames()
 
+    # time travel reads with the schema recorded as of its commit
+    first_two = [
+        os.path.join(pool.path, p)
+        for p in pool._log.snapshot(as_of_commit=f"commit-{cids[1]}")["files"]
+    ]
+    assert (
+        pool.df(as_of=cids[1]).schema
+        == spark.read.option("mergeSchema", "true").parquet(*first_two).schema
+    )
+
     def plan_reads():
         pool.df().schema
         pool.df(topic="T").schema
@@ -792,3 +751,32 @@ def test_txlog_recorded_schema_matches_merge_schema(
     assert pool.compact() >= len(evolving_batches)
     _assert_txlog_schema_parity(spark, pool)
     assert pool.df().count() == 7
+
+
+def test_log_without_metadata_refused(spark, tmp_path):
+    """The log's schemaString is the only schema source.  A log with no
+    metaData action is not a valid Delta table (TxLog.append writes one
+    at version 0): reads raise PoolError naming the cause rather than
+    guessing the schema from the data files' footers."""
+    pool = _mk(spark, tmp_path)
+    rel = "data/foreign-0001"
+    spark.createDataFrame(env_rows("T", [0]), _schema()).coalesce(1).write.parquet(
+        os.path.join(pool.path, rel)
+    )
+    (pfile,) = [
+        f for f in os.listdir(os.path.join(pool.path, rel)) if f.endswith(".parquet")
+    ]
+    lines = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"commitInfo": {"timestamp": 0, "operation": "WRITE"}},
+        {"add": {"path": f"{rel}/{pfile}", "partitionValues": {}, "size": 1,
+                 "modificationTime": 0, "dataChange": True}},
+    ]
+    log = TxLog(pool._fs, pool.path)
+    pool._fs.makedirs(log.path)
+    assert pool._fs.create_exclusive(
+        log._entry_path(0), "".join(json.dumps(ln) + "\n" for ln in lines).encode()
+    )
+    assert not pool.is_empty()
+    with pytest.raises(PoolError, match="no metaData schemaString"):
+        pool.df()

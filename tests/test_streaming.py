@@ -115,19 +115,13 @@ def test_ingest_stream_commits_to_pool(spark, tmp_path):
     assert pool.next_consumer_offset("T") == 3
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("fmt", ["commits", "txlog"])
-def test_ingest_commit_idempotent_on_replay(spark, tmp_path, fmt):
+def test_ingest_commit_idempotent_on_replay(spark, tmp_path):
     """Crash-replay exactly-once: a micro-batch re-delivered with the
     same (or lower) batch id — the foreachBatch replay after a crash
     between load_batch and checkpoint advance — commits nothing the
     second time.  Reference contract: resume-from-max + single writer
-    (README.md:140-156); ours is the txnAppId/txnVersion sidecar.
-    Holds identically under both table formats (the sidecar + writer
-    lock are format-independent)."""
-    pool = Pool.create(spark, str(tmp_path / "pool"), table_format=fmt)
+    (README.md:140-156); ours is the txnAppId/txnVersion sidecar."""
+    pool = Pool.create(spark, str(tmp_path / "pool"))
     env_schema = T.StructType.fromDDL(
         "kafka struct<topic:string,partition:bigint,offset:bigint>, "
         "key string, value struct<a:bigint>, _type string"
@@ -429,7 +423,7 @@ def test_to_kafka_streaming_replays_etl_demo(spark, tmp_path):
 
 
 def test_continuous_sink_survives_compact(spark, tmp_path):
-    """compact() rewrites every live row into a brand-new commit dir;
+    """compact() rewrites every live row into a brand-new data dir;
     the file-source checkpoint sees only new files, so without the
     produced-offset watermark a live or restarted continuous sink would
     re-produce the whole pool as broker duplicates (ADVICE r5).  With
@@ -445,7 +439,7 @@ def test_continuous_sink_survives_compact(spark, tmp_path):
         pool.load_batch(
             spark.createDataFrame(
                 [(("T", 0, i), None, (i,), "data") for i in offs], env_schema
-            )
+            ).coalesce(1)
         )
 
     def sink(df):
@@ -467,7 +461,8 @@ def test_continuous_sink_survives_compact(spark, tmp_path):
     try:
         q.processAllAvailable()
         assert len(tk.memory_sink_rows(name)) == 3
-        # compact mid-stream: 2 commits -> 1 new dir with the same rows
+        # compact mid-stream: 2 one-file commits -> 1 new file with the
+        # same rows
         assert pool.compact() == 2
         load([3])  # one genuinely new record after the compact
         q.processAllAvailable()
@@ -488,14 +483,13 @@ def test_continuous_sink_survives_compact(spark, tmp_path):
 
 
 def test_continuous_sink_txlog_pool(spark, tmp_path):
-    """continuous_sink over the Delta-format (txlog) pool: data lands
+    """continuous_sink over a live pool: data lands
     under data/commit-<id>/, published by one log append — the
     file-source glob must follow that layout, new commits stream as
     micro-batches, and the produced-offset watermark still makes
     compaction (log-tombstoned rewrite into a new data dir) replay
-    zero rows.  Proves the A15 sync loop runs continuously on BOTH
-    pool formats."""
-    pool = Pool.create(spark, str(tmp_path / "ctx"), table_format="txlog")
+    zero rows.  Proves the A15 sync loop runs continuously."""
+    pool = Pool.create(spark, str(tmp_path / "ctx"))
     env_schema = T.StructType.fromDDL(
         "kafka struct<topic:string,partition:bigint,offset:bigint>, "
         "key string, value struct<a:bigint>, _type string"
@@ -612,7 +606,7 @@ def test_ingest_stream_commits_to_txlog_pool(spark, tmp_path):
         F.struct(F.col("a")).alias("value"),
         F.lit("data").alias("_type"),
     )
-    pool = Pool.create(spark, str(tmp_path / "pool"), table_format="txlog")
+    pool = Pool.create(spark, str(tmp_path / "pool"))
     q = fk.run_ingest(env, pool, str(tmp_path / "ckpt"), available_now=True)
     q.awaitTermination(60)
     got = sorted(

@@ -1,6 +1,6 @@
 """Z-order clustering key (functions/zorder.py) + compact --zorder."""
 
-import glob
+import os
 
 import pyarrow.parquet as pq
 import pytest
@@ -62,9 +62,9 @@ def test_interleave_locality():
         assert (z >> 6) == (x // 8) * 2 + (y // 8)
 
 
-def _file_ranges(commit_dir, paths):
+def _file_ranges(files, paths):
     out = {p: [] for p in paths}
-    for f in sorted(glob.glob(f"{commit_dir}/*.parquet")):
+    for f in sorted(files):
         md = pq.read_metadata(f)
         stats = {p: [None, None] for p in paths}
         for rg in range(md.num_row_groups):
@@ -101,12 +101,13 @@ def test_compact_zorder_narrows_both_dims(spark, tmp_path):
             pool.load_batch(
                 spark.createDataFrame(grid[lo:lo + 256], schema)
             )
+        loaded = len(pool._log.snapshot()["files"])
         assert pool.compact(
             sort_by=["value.a", "value.b"], zorder=zorder,
             target_file_bytes=4096,
-        ) == 4
-        commit = pool._commit_dirs()[0]
-        rng = _file_ranges(commit, ["value.a", "value.b"])
+        ) == loaded  # a full compaction merges every live file
+        live = [os.path.join(pool.path, p) for p in pool._log.snapshot()["files"]]
+        rng = _file_ranges(live, ["value.a", "value.b"])
         assert len(rng["value.a"]) >= 2
         avg = {
             p: sum(hi - lo for lo, hi in rs) / len(rs)

@@ -191,11 +191,7 @@ def cmd_query(args) -> int:
 def cmd_create_pool(args) -> int:
     from .sources.pool import Pool
 
-    Pool.create(
-        _spark(args),
-        f"{args.lake}/{args.name}",
-        table_format=getattr(args, "format", "commits"),
-    )
+    Pool.create(_spark(args), f"{args.lake}/{args.name}")
     print(f"pool: {args.name} created")
     return 0
 
@@ -418,8 +414,8 @@ def cmd_train_bpe(args) -> int:
 
 
 def cmd_compact_pool(args) -> int:
-    """Merge a pool's commit dirs into one sorted commit (the OPTIMIZE
-    analog); old dirs stay for in-flight readers until vacuum."""
+    """Merge a pool's live files into one sorted commit (the OPTIMIZE
+    analog); the merged files stay for in-flight readers until vacuum."""
     from .sources.pool import Pool
 
     pool = Pool(_spark(args), f"{args.lake}/{args.name}")
@@ -428,13 +424,14 @@ def cmd_compact_pool(args) -> int:
         sort_by=args.sort_by.split(",") if args.sort_by else None,
         zorder=bool(getattr(args, "zorder", False)),
     )
-    print(f"pool: {args.name} compacted {n} commit{'s' if n != 1 else ''}")
+    print(f"pool: {args.name} compacted {n} file{'s' if n != 1 else ''}")
     return 0
 
 
 def cmd_vacuum_pool(args) -> int:
-    """Reclaim commit dirs orphaned by compaction after the grace
-    window (the VACUUM analog; bounds time travel)."""
+    """Reclaim data files removed from the log (by compaction or a
+    retraction) after the grace window, and never-logged ones (the
+    VACUUM analog; bounds time travel)."""
     from .sources.pool import Pool
 
     pool = Pool(_spark(args), f"{args.lake}/{args.name}")
@@ -442,7 +439,7 @@ def cmd_vacuum_pool(args) -> int:
         grace_seconds=args.grace_seconds,
         unpublished_grace_seconds=args.unpublished_grace_seconds,
     )
-    print(f"pool: {args.name} removed {n} dir{'s' if n != 1 else ''}")
+    print(f"pool: {args.name} removed {n} file{'s' if n != 1 else ''}")
     return 0
 
 
@@ -468,51 +465,23 @@ def cmd_info(args) -> int:
         print(json.dumps({"topic": args.topic, "low": low, "high": high}))
         return 0
     if args.pool:
-        import os
-
         from pyspark.sql import functions as F
 
         from .sources.pool import Pool
 
         pool = Pool(_spark(args), f"{args.lake}/{args.pool}")
         if getattr(args, "files", False):
-            # storage-layout observability: per-commit file count/bytes
-            # plus parquet footer min/max of the offset zone map - what
-            # compact --sort-by clustering is FOR (file skipping), made
-            # visible without reading data
-            if pool._log is not None:
-                # txlog pools: the zone map IS the log — no footer reads
-                for f in pool._log.snapshot()["files"].values():
-                    off = f.get("stats", {}).get("kafka.offset")
-                    print(json.dumps({
-                        "file": f["path"],
-                        "bytes": f.get("size"),
-                        "records": f.get("records"),
-                        "offset_min": off[0] if off else None,
-                        "offset_max": off[1] if off else None,
-                    }))
-                return 0
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            for cdir in pool._commit_dirs():
-                files = sorted(_glob.glob(f"{cdir}/*.parquet"))
-                total = sum(os.path.getsize(f) for f in files)
-                lo = hi = None
-                for f in files:
-                    md = _pq.read_metadata(f)
-                    for rg in range(md.num_row_groups):
-                        g = md.row_group(rg)
-                        for ci in range(g.num_columns):
-                            c = g.column(ci)
-                            if c.path_in_schema == "kafka.offset" and c.statistics:
-                                s = c.statistics
-                                lo = s.min if lo is None else min(lo, s.min)
-                                hi = s.max if hi is None else max(hi, s.max)
+            # storage-layout observability: per-file bytes, records and
+            # the offset zone map - what compact --sort-by clustering is
+            # FOR (file skipping) - straight from the log, no footer IO
+            for f in pool._log.snapshot()["files"].values():
+                off = f.get("stats", {}).get("kafka.offset")
                 print(json.dumps({
-                    "commit": os.path.basename(cdir), "files": len(files),
-                    "bytes": total, "offset_min": lo, "offset_max": hi,
+                    "file": f["path"],
+                    "bytes": f.get("size"),
+                    "records": f.get("records"),
+                    "offset_min": off[0] if off else None,
+                    "offset_max": off[1] if off else None,
                 }))
             return 0
         if pool.is_empty():
@@ -559,9 +528,8 @@ def cmd_ls(args) -> int:
             except (PoolError, FileNotFoundError, KeyError, ValueError):
                 continue
             found = True
-            commits = pool._commit_dirs()
             print(f"{name} key {pool.meta.get('key', '?')} "
-                  f"order asc {len(commits)} commits")
+                  f"order asc {len(pool._commit_names())} commits")
         if not found:
             print(f"no pools in {args.lake_dir}", file=sys.stderr)
         return 0
@@ -1215,19 +1183,12 @@ def main(argv: list[str] | None = None) -> int:
     cp = sub.add_parser("create-pool")
     cp.add_argument("name")
     cp.add_argument("--lake", default=".")
-    cp.add_argument(
-        "--format",
-        choices=["commits", "txlog"],
-        default="commits",
-        help="table format: commit-dir manifest (default) or the "
-             "per-file transaction log with min/max stats (Delta-seam)",
-    )
 
-    cpp = sub.add_parser("compact-pool", help="merge commit dirs (OPTIMIZE analog)")
+    cpp = sub.add_parser("compact-pool", help="merge live files (OPTIMIZE analog)")
     cpp.add_argument("name")
     cpp.add_argument("--lake", default=".")
     cpp.add_argument("--small-bytes", type=int, default=None,
-                     help="size-tiered mode: merge only commits smaller "
+                     help="size-tiered mode: merge only files smaller "
                           "than this many bytes (default: merge all)")
     cpp.add_argument("--sort-by", default=None,
                      help="cluster the merged commit by these comma-"
@@ -1241,13 +1202,13 @@ def main(argv: list[str] | None = None) -> int:
                           "the columns, multi-predicate scans prune "
                           "multiplicatively (OPTIMIZE ZORDER BY)")
 
-    vp = sub.add_parser("vacuum-pool", help="reclaim orphaned commit dirs")
+    vp = sub.add_parser("vacuum-pool", help="reclaim removed and never-logged data files")
     vp.add_argument("name")
     vp.add_argument("--lake", default=".")
     vp.add_argument("--grace-seconds", type=float, default=3600.0)
     vp.add_argument("--unpublished-grace-seconds", type=float, default=None,
-                    help="grace for never-published dirs (crashed or "
-                         "IN-FLIGHT direct writes); floors at "
+                    help="grace for never-logged files (crashed or "
+                         "IN-FLIGHT writes); floors at "
                          "max(grace, 1h) unless set explicitly")
 
     info = sub.add_parser("info", help="watermarks per topic")

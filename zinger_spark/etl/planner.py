@@ -330,8 +330,8 @@ class EtlPipeline:
         streaming egress (to_kafka.continuous_sink).
 
         The trigger glob (``Pool.data_glob``) sees a commit's files as
-        they land, which can be just before the commit is published
-        (manifest or log append), on both table formats.  A wake-up
+        they land, which can be just before the log append publishes
+        the commit.  A wake-up
         that fires in that window runs a ``run()`` that does not see
         the commit yet; the NEXT wake-up's ``run()`` picks it up.  So
         the last commit before the input goes quiet can wait for the

@@ -8,35 +8,30 @@ Reference semantics (/root/reference):
   - data records and marker records (done/cursor) share the pool
     (etl/pipeline.go:29, design.md:117-128)
 
-Spark mapping: one pool, two table formats, one layout each.
-
-- ``commits`` (default): a flat directory of ``commit-<id>/`` parquet
-  dirs.  One commit = one atomically-renamed subdirectory write (or a
-  direct write on object stores, where a rename is a copy), and
-  ``_manifest.json`` — written by ``create`` and required from then on
-  — is the one record of which commits are live: a commit becomes
-  visible when the manifest append lands, never by directory listing.
-- ``txlog``: parquet files under ``data/commit-<id>/`` published by a
-  per-file transaction log with min/max stats (sources/txlog.py, the
-  Delta/Iceberg seam).  This is the format for pools at scale: topic
-  and offset restrictions prune files from the recorded stats.
+Spark mapping: parquet files under ``data/commit-<id>/``, published by
+a per-file transaction log in the Delta wire format (sources/txlog.py).
+A commit is one atomic log append of per-file ADD actions carrying
+min/max stats for ``kafka.topic``, ``kafka.partition`` and
+``kafka.offset``; no data byte is renamed.  The log is the only record
+of table state: which files are live, the commit history, the as-of
+floor raised by compaction, and the table schema.  Topic and offset
+restrictions prune files driver-side from the recorded stats, and the
+offset bookkeeping answers from them when every file is
+single-valued.
 
 Commits carrying different (fused-compatible) value schemas coexist,
 mirroring Zed's per-record typing.  The table schema — the fused union
 of every live commit's schema, as a ``mergeSchema`` footer pass would
-infer it — is recorded when a commit is published: in the manifest's
-``schemas`` history for commits pools, in the log's
-``metaData.schemaString`` for txlog pools.  Readers hand it to Spark,
-so a read plans without a schema-inference job.  A manifest written
-before the history existed is backfilled once, from one ``mergeSchema``
-read under the writer lock.  Only this module decides where data files
-live: file-source streams over a pool take their glob from
+infer it — is the log's ``metaData.schemaString``, fused in by the same
+append that publishes a commit.  Readers hand it to Spark, so a read
+plans without a schema-inference job.  Only this module decides where
+data files live: file-source streams over a pool take their glob from
 ``Pool.data_glob``.
 
-Two older layouts — hive-partitioned ``_topic=T/commit-N`` dirs
-(``"partitioned": true`` in ``_pool.json``) and commit dirs with no
-manifest — are refused with ``PoolError`` on open rather than read as
-empty.
+Two older layouts are refused with ``PoolError`` on open rather than
+read as empty: hive-partitioned ``_topic=T/commit-N`` dirs
+(``"partitioned": true`` in ``_pool.json``) and the commit-dir format
+(flat ``commit-<id>/`` dirs published by a JSON manifest).
 """
 
 from __future__ import annotations
@@ -46,19 +41,23 @@ import json
 import os
 import threading
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..datamodel import TYPE_DONE
 from ..operators.relational import ordered_batch as _ordered_batch
 from .storage import PosixStorage
-from .txlog import _fuse_schema_json
+from .txlog import (
+    TxLog,
+    collect_file_stats,
+    fresh_commit_id,
+    list_parquet_files,
+    prune_files,
+)
 
 POOL_KEY = "kafka.offset"
 _META = "_pool.json"
-_MANIFEST = "_manifest.json"
+_FORMAT = "txlog"
 
 
 class PoolError(Exception):
@@ -66,7 +65,8 @@ class PoolError(Exception):
 
 
 class Pool:
-    """An ordered pool backed by parquet commit dirs under ``path``."""
+    """An ordered pool: parquet files under ``path`` published by the
+    transaction log in ``path/_delta_log``."""
 
     def __init__(
         self,
@@ -95,22 +95,20 @@ class Pool:
         if meta.get("partitioned"):
             raise PoolError(
                 f"pool {path} uses the hive-partitioned _topic= layout, "
-                "which is no longer supported; recreate it as a txlog pool "
-                "(per-file stats prune topics) and reload its data"
+                "which is no longer supported; create a new pool (per-file "
+                "stats prune topics) and reload its data"
+            )
+        if meta.get("format") != _FORMAT:
+            raise PoolError(
+                f"pool {path} uses the commit-dir (_manifest.json) format, "
+                "which is no longer supported; create a new pool and reload "
+                "its data"
             )
         self.meta = meta
         self.lock_timeout = self.DEFAULT_LOCK_TIMEOUT
         self._local_lock = threading.RLock()
         self._lock_depth = 0
-        # (live-path-set, StructType) — see _txlog_schema
-        self._schema_cache: tuple[tuple, object] | None = None
-        if meta.get("format") == "txlog":
-            from .txlog import TxLog  # noqa: PLC0415
-
-            self._log: "TxLog | None" = TxLog(self._fs, path)
-        else:
-            self._log = None
-            self._read_manifest()  # refuses a manifest-less commits pool
+        self._log = TxLog(self._fs, path)
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -121,140 +119,38 @@ class Pool:
         key: str = POOL_KEY,
         order: str = "asc",
         storage=None,
-        table_format: str = "commits",
     ) -> "Pool":
-        """Create an empty pool at ``path`` and open it.
-
-        ``table_format="commits"`` (default) publishes flat commit dirs
-        through ``_manifest.json``.  ``table_format="txlog"`` swaps
-        commit-dir publication for a per-FILE transaction log with
-        min/max stats (sources/txlog.py — the Delta/Iceberg seam):
-        visibility is one atomic log append, and scoped reads prune
-        files driver-side from recorded stats — the layout for pools at
-        scale (SCALE.md)."""
+        """Create an empty pool at ``path`` and open it.  Its log is
+        written by the first commit."""
         if order != "asc":
             raise PoolError(f"pool order must be asc (got {order})")
-        if table_format not in ("commits", "txlog"):
-            raise PoolError(f"unknown table_format {table_format!r}")
         fs = storage or PosixStorage()
         fs.makedirs(path)
-        if table_format == "commits":
-            # The manifest is the visibility truth from the first commit
-            # on: readers never see a half-renamed commit or a
-            # rename-free direct write, only manifest-published ones.
-            # Written before _pool.json, so no reader can open the pool
-            # without it.
-            fs.write_json_atomic(
-                os.path.join(path, _MANIFEST), {"commits": [], "orphaned": {}}
-            )
         fs.write_json_atomic(
             os.path.join(path, _META),
-            {"key": key, "order": order, "format": table_format},
+            {"key": key, "order": order, "format": _FORMAT},
         )
         return Pool(spark, path, expected_key=key, storage=storage)
 
     # -- read ---------------------------------------------------------------
 
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, _MANIFEST)
-
-    def _read_manifest(self) -> dict:
-        m = self._fs.read_json(self._manifest_path())
-        if m is None:
-            raise PoolError(
-                f"pool {self.path}: missing {_MANIFEST} — the manifest "
-                "is the only record of a commits pool's live commits"
-            )
-        return m
-
-    def _write_manifest(
-        self,
-        commits: list[str],
-        orphaned: dict[str, float] | None = None,
-        asof_floor: str | None = None,
-        schemas: list[list[str]] | None = None,
-    ) -> None:
-        """Atomic manifest swap (tmp + rename), single-writer like the
-        reference's sync processes. ``orphaned`` records WHEN each
-        no-longer-live commit left the manifest — vacuum's grace clock
-        starts there, not at the dir's (much older) write mtime.
-        ``asof_floor`` (monotone; compact() raises it to its merged
-        output) is the oldest commit name time travel may address —
-        reads below it would silently miss merged-away rows, so df()
-        refuses them loudly instead.  ``schemas`` replaces the schema
-        history (see ``_schemas``); None keeps the current one."""
-        m = {"commits": commits, "orphaned": orphaned or {}}
-        prior = self._read_manifest()
-        floor = max(filter(None, [prior.get("asof_floor"), asof_floor]), default=None)
-        if floor is not None:
-            m["asof_floor"] = floor
-        if schemas is None:
-            schemas = prior.get("schemas")
-        if schemas is not None:
-            m["schemas"] = schemas
-        self._fs.write_json_atomic(self._manifest_path(), m)
-
-    def _schemas(self, m: dict) -> list[list[str]]:
-        """The manifest's schema history: ``[commit name, table schema
-        JSON]`` pairs in commit order, one per commit that widened the
-        table schema.  The schema as of commit C is the last entry at
-        or before C.
-
-        A manifest written before the history existed (live commits, no
-        ``schemas`` key) is backfilled here, once: one ``mergeSchema``
-        read over the live commits, recorded under the writer lock as
-        the schema from the oldest live commit on.  Time travel on such
-        a pool reads every commit with that schema (a column added
-        later reads as null)."""
-        if "schemas" in m or not m["commits"]:
-            return m.get("schemas", [])
-        with self.writer_lock():
-            m = self._read_manifest()
-            if "schemas" not in m:
-                commits = sorted(m["commits"])
-                inferred = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(*[os.path.join(self.path, c) for c in commits])
-                    .schema
-                )
-                self._write_manifest(
-                    m["commits"], m.get("orphaned"),
-                    schemas=[[commits[0], _fuse_schema_json(None, inferred.json())]],
-                )
-                m = self._read_manifest()
-            return m["schemas"]
-
-    def _table_schema(self, m: dict, as_of: str | None = None) -> T.StructType:
-        """The recorded table schema, now or as of commit name ``as_of``."""
-        at = [s for c, s in self._schemas(m) if as_of is None or c <= as_of]
-        return T.StructType.fromJson(json.loads(at[-1]))
-
     def _commit_names(self) -> list[str]:
-        """Live commit names, sorted (= commit order: ms-prefixed ids):
-        the manifest's list, or the commits recorded in a txlog pool's
-        log."""
-        if self._log is not None:
-            return sorted(self._log.snapshot()["commits"])
-        return sorted(self._read_manifest()["commits"])
-
-    def _commit_dirs(self) -> list[str]:
-        return [os.path.join(self.path, d) for d in self._commit_names()]
+        """Commit names in the log's history, sorted (= commit order:
+        ms-prefixed ids).  Retracted commits leave it; compaction adds
+        its merged commit and keeps the merged-away ones."""
+        return sorted(self._log.snapshot()["commits"])
 
     def data_glob(self) -> str:
-        """Glob naming the dirs that hold the pool's data files —
-        ``commit-*`` for commits pools, ``data/commit-*`` for txlog
-        pools — for file-source streams that must see every new commit
+        """Glob naming the dirs that hold the pool's data files, for
+        file-source streams that must see every new commit
         (``to_kafka.continuous_sink``, ``EtlPipeline.run_stream``).
         The glob sees files as they land, which can be just BEFORE the
-        commit is published (manifest or log append); readers of the
-        pool itself go through ``df``."""
-        sub = "data/commit-*" if self._log is not None else "commit-*"
-        return os.path.join(self.path, sub)
+        log append publishes them; readers of the pool itself go
+        through ``df``."""
+        return os.path.join(self.path, "data", "commit-*")
 
     def is_empty(self) -> bool:
-        if self._log is not None:
-            return not self._log.snapshot()["files"]
-        return not self._commit_names()
+        return not self._log.snapshot()["files"]
 
     # -- writer lock --------------------------------------------------------
 
@@ -262,7 +158,7 @@ class Pool:
     #: ETL run or compact() legitimately HOLDS the lock across a whole
     #: Spark job (minutes at scale), and a contending writer — e.g. a
     #: streaming ingest foreachBatch — must wait out a healthy holder,
-    #: not error after 2 minutes with its tmp dir already written.
+    #: not error after 2 minutes with its data files already written.
     #: Override per-pool (``pool.lock_timeout = ...``) or per-call.
     DEFAULT_LOCK_TIMEOUT = 1800.0
 
@@ -354,66 +250,36 @@ class Pool:
         return self._fs.read_json(os.path.join(self.path, name))
 
     def write_sidecar(self, name: str, obj: dict) -> None:
-        """Atomic swap (tmp + rename), same pattern as the manifest."""
+        """Atomic swap (tmp + rename on posix, one PUT on object stores)."""
         self._fs.write_json_atomic(os.path.join(self.path, name), obj)
 
-    def df(self, topic: str | None = None, as_of: str | None = None) -> DataFrame:
+    def df(
+        self,
+        topic: str | None = None,
+        as_of: str | None = None,
+        offset_lo: int | None = None,
+    ) -> DataFrame:
         """The whole pool as a DataFrame with the recorded table schema
         (the fused union across commits), read as ONE parquet scan over
-        the live commits; planning it starts no Spark job.
+        the live files; planning it starts no Spark job.
 
-        ``topic`` restricts to one topic's records: a filter on
-        ``kafka.topic`` for commits pools, and on txlog pools also a
-        driver-side prune of the files whose recorded topic stats
-        exclude it.
+        ``topic`` restricts to one topic's records and ``offset_lo`` to
+        offsets at or above it: the log is replayed and the files whose
+        recorded min/max stats exclude the restriction are pruned
+        driver-side, before Spark lists anything.  Pruning is
+        conservative (a file without stats is kept) and the logical
+        filters are still applied, so it only shrinks IO.
 
         ``as_of`` is time travel (the Delta ``versionAsOf`` analog):
         pass a commit id previously returned by ``load_batch`` and the
         read sees only commits up to and including it, with the schema
         recorded as of that commit — commit ids are
         millisecond-prefixed, so lexicographic order IS commit order.
-        ``compact()`` raises the manifest's as-of floor to its merged
+        ``compact()`` raises the log's as-of floor to its merged
         output: travel below the floor would silently miss merged-away
         rows, so it raises ``PoolError`` instead (the same way Delta
-        VACUUM bounds its time travel, but loud)."""
-        if self._log is not None:
-            return self._df_txlog(topic=topic, as_of=as_of)
-        m = self._read_manifest()
-        commits = sorted(m["commits"])
-        if as_of is not None:
-            cut = f"commit-{as_of}"
-            floor = m.get("asof_floor")
-            if floor is not None and cut < floor:
-                raise PoolError(
-                    f"pool {self.path}: as_of {as_of} predates compaction "
-                    f"(floor {floor}) — the merged-away commits are no "
-                    "longer individually addressable"
-                )
-            commits = [c for c in commits if c <= cut]
-            if not commits:
-                raise PoolError(f"pool {self.path}: no commits at or before {as_of}")
-        if not commits:
-            raise PoolError(f"pool {self.path} is empty")
-        cut = f"commit-{as_of}" if as_of is not None else None
-        out = self._read_commits(commits, self._table_schema(m, cut))
-        if topic is not None:
-            out = out.filter(F.col("kafka.topic") == topic)
-        return out
-
-    def _df_txlog(
-        self,
-        topic: str | None = None,
-        as_of: str | None = None,
-        offset_lo: int | None = None,
-        offset_hi: int | None = None,
-    ) -> DataFrame:
-        """txlog read path: replay the log, prune FILES on recorded
-        min/max stats (driver-side, before Spark lists anything), read
-        the survivors as one FileScan.  Stats pruning is conservative
-        (a file without stats is kept), so the logical filters are
-        still applied — pruning only shrinks IO, never changes results."""
-        from .txlog import prune_files  # noqa: PLC0415
-
+        VACUUM bounds its time travel, but loud).  So does travel to a
+        retracted commit."""
         snap = self._log.snapshot(
             as_of_commit=f"commit-{as_of}" if as_of is not None else None
         )
@@ -441,8 +307,8 @@ class Pool:
         files = list(snap["files"].values())
         if not files:
             raise PoolError(f"pool {self.path} is empty")
-        pruned = prune_files(files, topic=topic, offset_lo=offset_lo, offset_hi=offset_hi)
-        schema = self._txlog_schema(files, snap.get("schema_string"))
+        pruned = prune_files(files, topic=topic, offset_lo=offset_lo)
+        schema = self._schema(snap)
         if not pruned:
             # everything pruned: empty frame with the FULL pool schema
             out = self.spark.createDataFrame([], schema)
@@ -460,116 +326,32 @@ class Pool:
             out = out.filter(F.col("kafka.topic") == topic)
         if offset_lo is not None:
             out = out.filter(F.col("kafka.offset") >= offset_lo)
-        if offset_hi is not None:
-            out = out.filter(F.col("kafka.offset") < offset_hi)
         return out
 
-    def _txlog_schema(self, files: list[dict], schema_string: str | None = None):
-        """Union schema of a txlog pool.
-
-        Primary source: the log's own ``metaData.schemaString`` (Delta
-        semantics — readers take the schema from the log, not from
-        footers; it is maintained as the fused union on every append),
-        which costs ZERO additional IO since the snapshot was already
-        replayed.  Fallback for logs without metaData (foreign writers
-        that skipped it, pre-r9 logs): one mergeSchema footer pass over
-        the live files, cached per file set."""
-        if schema_string:
-            from pyspark.sql import types as T  # noqa: PLC0415
-
-            return T.StructType.fromJson(json.loads(schema_string))
-        key = tuple(sorted(f["path"] for f in files))
-        cached = self._schema_cache
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        schema = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(self.path, f["path"]) for f in files])
-            .schema
-        )
-        self._schema_cache = (key, schema)
-        return schema
-
-    def query(self, fn) -> DataFrame:
-        """Run a DataFrame transform over the pool (Lake.Query analog,
-        fifo/lake.go:50-56 — ours takes a plan builder, not query text)."""
-        return fn(self.df())
+    def _schema(self, snap: dict) -> T.StructType:
+        """The table schema of a log snapshot: its ``metaData.schemaString``
+        (Delta semantics — readers take the schema from the log, not
+        from footers).  ``TxLog.append`` writes metaData at version 0,
+        so a log without one was not written by a Delta writer."""
+        if not snap["schema_string"]:
+            raise PoolError(
+                f"pool {self.path}: the transaction log has no metaData "
+                "schemaString, so it is not a valid Delta table"
+            )
+        return T.StructType.fromJson(json.loads(snap["schema_string"]))
 
     # -- write --------------------------------------------------------------
 
     def load_batch(self, df: DataFrame) -> str:
-        """Atomic commit: write to a temp dir, rename into place
-        (LoadBatch, fifo/lake.go:58-60). Returns the commit id.  The
-        manifest append, not the rename, is the visibility point.
-
-        txlog pools write data files straight to their final prefix and
-        publish them as per-file ADD actions (with footer min/max
-        stats) in one atomic log append — no rename of data bytes at
-        all, the Delta protocol."""
-        commit_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        if self._log is not None:
-            return self._load_batch_txlog(df, commit_id)
-        # Rename-free commit path: on object stores a "rename" is a
-        # server-side COPY of every data byte (S3/GCS have no rename),
-        # so when the backend declares rename_is_copy, flat pools write
-        # data straight to its final commit prefix — the manifest
-        # append below is the only visibility point either way, and an
-        # unpublished dir left by a crash is reclaimed by vacuum()'s
-        # not-in-manifest sweep.
-        name = f"commit-{commit_id}"
-        direct = getattr(self._fs, "rename_is_copy", False)
-        tmp = os.path.join(self.path, name if direct else f".tmp-{commit_id}")
-        df.write.mode("overwrite").parquet(tmp)
-        # All-empty batch = "no commit happened", SAME as the txlog
-        # path (the two formats are one logical pool contract): a
-        # zero-row commit would flip is_empty() and mint a hollow
-        # as_of target on one format but not the other.  Row counts
-        # come from parquet footers (short-circuits on the first
-        # non-empty file, so a normal batch pays ONE footer read);
-        # the dead dir is reclaimed by vacuum's unpublished sweep.
-        if self._written_rowcount_is_zero(tmp):
-            self._fs.rmtree(tmp)
-            return commit_id
-        # drop spark's _SUCCESS etc? keep; parquet reader ignores non-parquet
-        # Data write happens unlocked (it is slow and conflict-free: the
-        # tmp dir is writer-unique); only the rename + manifest
-        # read-modify-write is the critical section — without the lock
-        # two concurrent load_batch calls can each read the same
-        # manifest and one commit silently vanishes from the list.
-        with self.writer_lock():
-            if not direct:
-                self._fs.rename(tmp, os.path.join(self.path, name))
-            m = self._read_manifest()
-            # the commit's schema joins the recorded table schema in the
-            # same manifest swap that publishes it
-            schemas = list(self._schemas(m))
-            cur = schemas[-1][1] if schemas else None
-            fused = _fuse_schema_json(cur, df.schema.json())
-            if fused != cur:
-                schemas.append([name, fused])
-            self._write_manifest(m["commits"] + [name], m.get("orphaned"), schemas=schemas)
-        return commit_id
-
-    def _written_rowcount_is_zero(self, root: str) -> bool:
-        """True iff every parquet file in the commit dir ``root`` has
-        zero rows.  Footer-only, short-circuits on the first non-empty
-        file."""
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        return not any(
-            pq.ParquetFile(os.path.join(root, name)).metadata.num_rows > 0
-            for name in self._fs.listdir(root)
-            if name.endswith(".parquet")
-        )
-
-    def _load_batch_txlog(self, df: DataFrame, commit_id: str) -> str:
-        """txlog commit: Spark writes parquet under ``data/<commit>/``
-        (unpublished until logged — a crash leaves dark files for
-        vacuum), stats come from the footers, and ONE log append makes
-        the files live.  The write itself runs unlocked; only the
-        version-assigning append is the critical section."""
-        from .txlog import collect_file_stats, list_parquet_files  # noqa: PLC0415
-
+        """Atomic commit (LoadBatch, fifo/lake.go:58-60); returns the
+        commit id.  Spark writes the batch, offset-sorted, under
+        ``data/commit-<id>/`` (unpublished until logged — a crash
+        leaves dark files for vacuum), stats come from the parquet
+        footers, and ONE log append of per-file ADD actions makes the
+        files live — the Delta protocol, no rename of data bytes.  The
+        write itself runs unlocked; only the version-assigning append
+        is the critical section."""
+        commit_id = fresh_commit_id()
         rel_dir = os.path.join("data", f"commit-{commit_id}")
         df.sortWithinPartitions("kafka.offset").write.mode("overwrite").parquet(
             os.path.join(self.path, rel_dir)
@@ -585,11 +367,11 @@ class Pool:
         if not adds:
             # A fully-empty batch is "no commit happened": logging a
             # zero-file commit would leave a pool that claims history
-            # but raises from df() (no live files -> no schema), and
-            # the commit id would be a hollow as_of target.  The dark
-            # part files are reclaimed by vacuum's not-in-log sweep,
-            # same as a crashed write.  (An empty streaming micro-batch
-            # is the normal producer of this case.)
+            # but raises from df(), and the commit id would be a hollow
+            # as_of target.  The dark part files are reclaimed by
+            # vacuum's not-in-log sweep, same as a crashed write.  (An
+            # empty streaming micro-batch is the normal producer of
+            # this case.)
             return commit_id
         with self.writer_lock():
             self._log.append(
@@ -602,75 +384,69 @@ class Pool:
         ETL batch).  Only safe for the most recent commit written by
         this process — not a general rollback."""
         name = f"commit-{commit_id}"
-        if self._log is not None:
-            with self.writer_lock():
-                entries = self._log.entries()
-                added = [
-                    a["path"]
-                    for e in entries
-                    if e.get("commit") == name
-                    for a in e.get("add", [])
-                ]
-                if any(e.get("commit") == name for e in entries):
-                    # the table schema from before the commit: the last
-                    # schemaString logged ahead of its entry
-                    prior = None
-                    for e in entries:
-                        if e.get("commit") == name:
-                            break
-                        prior = e.get("schema_string") or prior
-                    # commit=None: a retraction is not a new commit.
-                    # The retract marker makes snapshot() drop the
-                    # commit from pool history entirely — it leaves
-                    # _commit_names/commits() and is rejected as an
-                    # as_of target (its files are deleted once vacuum
-                    # runs, so time travel to it would hand Spark
-                    # vanished paths).
-                    self._log.append(
-                        None, remove=added, retract=name, schema_json=prior
-                    )
-            return
         with self.writer_lock():
-            m = self._read_manifest()
-            # dropping the commit's history entry puts back the schema
-            # the manifest held before it
-            self._write_manifest(
-                [c for c in m["commits"] if c != name], m.get("orphaned"),
-                schemas=[e for e in self._schemas(m) if e[0] != name],
-            )
-            d = os.path.join(self.path, name)
-            if self._fs.isdir(d):
-                self._fs.rmtree(d)
+            entries = self._log.entries()
+            if not any(e.get("commit") == name for e in entries):
+                return
+            added = [
+                a["path"]
+                for e in entries
+                if e.get("commit") == name
+                for a in e.get("add", [])
+            ]
+            # the table schema from before the commit: the last
+            # schemaString logged ahead of its entry
+            prior = None
+            for e in entries:
+                if e.get("commit") == name:
+                    break
+                prior = e.get("schema_string") or prior
+            # commit=None: a retraction is not a new commit.  The
+            # retract marker makes snapshot() drop the commit from pool
+            # history entirely — it leaves _commit_names() and is
+            # rejected as an as_of target (its files are deleted once
+            # vacuum runs, so time travel to it would hand Spark
+            # vanished paths).
+            self._log.append(None, remove=added, retract=name, schema_json=prior)
 
     # -- offset bookkeeping (A9-A11) ----------------------------------------
 
-    def next_consumer_offset(self, topic: str) -> int:
-        """max stored offset for topic + 1 (fifo/lake.go:62-82).
+    def _next_offsets(self, cols: list[str], topic: str | None = None) -> dict[tuple, int]:
+        """{values of ``cols``: max stored offset + 1} over the pool, or
+        over ``topic``'s records.  ``cols`` starts with ``kafka.topic``.
 
-        Same txlog metadata fast path as next_producer_offsets: exact
-        from log stats when every live file is single-topic, falling
-        back to the scan otherwise."""
-        if self.is_empty():
-            return 0
-        if self._log is not None:
-            files = list(self._log.snapshot()["files"].values())
-            best = 0
-            for f in files:
-                st = f.get("stats", {})
-                t, o = st.get("kafka.topic"), st.get("kafka.offset")
-                if not t or not o or t[0] != t[1]:
-                    break
-                if t[0] == topic:
-                    best = max(best, int(o[1]) + 1)
-            else:
-                return best
-        row = (
-            self.df()
-            .filter(F.col("kafka.topic") == topic)
+        Answered from the log's per-file stats alone when every live
+        file holds one value of each of ``cols`` (always true for
+        per-topic, per-partition ingest batches): zero data IO.  Any
+        mixed or statless file falls back to one grouped scan
+        (partial-agg max, no window) — the stats never change the
+        answer, only the IO."""
+        out: dict[tuple, int] = {}
+        for f in self._log.snapshot()["files"].values():
+            st = f.get("stats", {})
+            vals, o = [st.get(c) for c in cols], st.get("kafka.offset")
+            if not o or any(not v or v[0] != v[1] for v in vals):
+                break  # mixed or statless file: the stats can't answer
+            key = tuple(v[0] for v in vals)
+            if topic is None or key[0] == topic:
+                out[key] = max(out.get(key, 0), int(o[1]) + 1)
+        else:
+            return out
+        rows = (
+            self.df(topic=topic)
+            .groupBy(*[F.col(c) for c in cols])
             .agg(F.max("kafka.offset").alias("mx"))
-            .collect()[0]
+            .collect()
         )
-        return 0 if row["mx"] is None else int(row["mx"]) + 1
+        return {
+            tuple(r[:-1]): int(r["mx"]) + 1
+            for r in rows
+            if r["mx"] is not None and None not in tuple(r[:-1])
+        }
+
+    def next_consumer_offset(self, topic: str) -> int:
+        """max stored offset for topic + 1 (fifo/lake.go:62-82)."""
+        return max(self._next_offsets(["kafka.topic"], topic).values(), default=0)
 
     def next_consumer_offsets_by_partition(self, topic: str) -> dict[int, int]:
         """{partition: max stored offset + 1} for a topic — the
@@ -680,89 +456,22 @@ class Pool:
         (fifo/consumer.go:59-63) because its pool key is the single
         per-topic offset; Kafka's actual ordering contract is PER
         PARTITION, so 100-TB ingest resumes each (topic, partition)
-        independently.  txlog metadata answers exactly when every live
-        file is single-(topic, partition); any mixed or statless file
-        falls back to one grouped scan (partial-agg max, no window)."""
-        if self._log is not None:
-            # ONE log replay serves both the emptiness check and the
-            # stats walk (is_empty() would be a second full snapshot —
-            # O(interval) object-store GETs per stream start, found by
-            # the r9 review)
-            files = list(self._log.snapshot()["files"].values())
-            if not files:
-                return {}
-            out: dict[int, int] = {}
-            for f in files:
-                st = f.get("stats", {})
-                t = st.get("kafka.topic")
-                p = st.get("kafka.partition")
-                o = st.get("kafka.offset")
-                if not t or not p or not o or t[0] != t[1] or p[0] != p[1]:
-                    break  # mixed or statless file: metadata can't answer
-                if t[0] == topic:
-                    pid = int(p[0])
-                    out[pid] = max(out.get(pid, 0), int(o[1]) + 1)
-            else:
-                return out
-        elif self.is_empty():  # commit-dir format: manifest read, cheap
-            return {}
-        rows = (
-            self.df(topic=topic)
-            .groupBy(F.col("kafka.partition").alias("p"))
-            .agg(F.max("kafka.offset").alias("mx"))
-            .collect()
-        )
-        return {int(r["p"]): int(r["mx"]) + 1 for r in rows if r["p"] is not None}
+        independently."""
+        by_part = self._next_offsets(["kafka.topic", "kafka.partition"], topic)
+        return {int(p): n for (_, p), n in by_part.items()}
 
     def next_producer_offsets(self) -> dict[str, int]:
-        """{topic: max offset + 1} over the pool (etl/pool.go:60-81).
-
-        txlog pools answer from LOG METADATA alone when every live file
-        is single-topic (stats min == max for kafka.topic — always true
-        for per-topic ingest batches): per-topic max offset = max of
-        those files' recorded offset maxima, zero data IO.  Any
-        mixed-topic or statless file falls back to the exact scan —
-        the fast path never changes the answer, only the IO."""
-        if self.is_empty():
-            return {}
-        if self._log is not None:
-            files = list(self._log.snapshot()["files"].values())
-            out: dict[str, int] = {}
-            for f in files:
-                st = f.get("stats", {})
-                t, o = st.get("kafka.topic"), st.get("kafka.offset")
-                if not t or not o or t[0] != t[1]:
-                    break  # mixed or statless file: metadata can't answer
-                out[t[0]] = max(out.get(t[0], 0), int(o[1]) + 1)
-            else:
-                return out
-        rows = (
-            self.df()
-            .groupBy(F.col("kafka.topic").alias("topic"))
-            .agg(F.max("kafka.offset").alias("offset"))
-            .collect()
-        )
-        return {r["topic"]: int(r["offset"]) + 1 for r in rows if r["topic"] is not None}
+        """{topic: max offset + 1} over the pool (etl/pool.go:60-81)."""
+        return {t: n for (t,), n in self._next_offsets(["kafka.topic"]).items()}
 
     def read_batch(self, topic: str, offset: int, size: int, transform=None) -> DataFrame:
         """Ordered batch scan (fifo/lake.go:84-92) over a topic-scoped
-        read.  txlog pools prune files whose recorded topic stats
-        exclude the topic or whose max offset is below the batch start
-        — a resume-from-cursor read touches only the tail files, not
-        the whole topic history."""
-        if self._log is not None:
-            base = self._df_txlog(topic=topic, offset_lo=offset)
-        else:
-            base = self.df(topic=topic)
+        read that prunes the files whose recorded topic stats exclude
+        the topic or whose max offset is below the batch start — a
+        resume-from-cursor read touches only the tail files, not the
+        whole topic history."""
+        base = self.df(topic=topic, offset_lo=offset)
         return _ordered_batch(base, topic, offset, size, transform=transform)
-
-    def done_offsets(self, topic: str) -> DataFrame:
-        """done-marker offsets for a topic (the anti-join right side)."""
-        return (
-            self.df()
-            .filter((F.col("_type") == TYPE_DONE) & (F.col("kafka.topic") == topic))
-            .select(F.col("kafka.topic").alias("topic"), F.col("kafka.offset").alias("offset"))
-        )
 
     def compact(
         self,
@@ -771,37 +480,40 @@ class Pool:
         zorder: bool = False,
         target_file_bytes: int | None = None,
     ) -> int:
-        """Merge commit dirs into one (the Delta OPTIMIZE analog).
+        """Merge live files into one commit (the Delta OPTIMIZE analog).
+        Returns the number of files merged: the unit of the log is the
+        file.
 
         Many small commits are the expected write pattern (one per
         micro-batch); reads pay per-file open cost and the driver pays
-        listing cost. Compaction rewrites commits as one sorted commit
-        and atomically swaps the MANIFEST — the old commit dirs stay on
-        disk so concurrent readers mid-scan (who listed files before
-        the swap) never hit vanished parquet files.  ``vacuum``
-        reclaims them after a grace window (the Delta log + VACUUM
-        pattern). Returns commits merged.
+        log-replay cost.  Compaction rewrites the merged files as one
+        sorted commit and publishes its adds and the merged files'
+        removes in ONE log append — the old files stay on disk so
+        concurrent readers mid-scan never hit vanished parquet files.
+        ``vacuum`` reclaims them after a grace window (the Delta log +
+        VACUUM pattern).
 
         ``small_bytes`` is SIZE-TIERED compaction, the 100-TB mode: a
         full rewrite is O(pool) every time, so a steady micro-batch
-        ingest would spend most of its IO rewriting already-big
-        commits.  With a threshold, only commits smaller than
-        ``small_bytes`` merge (sizes from storage metadata, no data
-        read) and the big ones are left alone — each byte is rewritten
-        O(log(pool/batch)) times over its life instead of O(compactions).
-        Every compaction (tiered or full) raises the manifest's as-of
-        floor to its merged output; time travel below the floor raises
-        rather than silently returning a view missing merged rows.
+        ingest would spend most of its IO rewriting already-big files.
+        With a threshold, only files smaller than ``small_bytes`` merge
+        (sizes from the log's add actions, no filesystem pass) and the
+        big ones are left alone — each byte is rewritten
+        O(log(pool/batch)) times over its life instead of
+        O(compactions).  Every compaction (tiered or full) raises the
+        log's as-of floor to its merged output; time travel below the
+        floor raises rather than silently returning a view missing
+        merged rows.
 
         ``sort_by`` CLUSTERS the merged output by the given (possibly
         nested) columns: range-repartition + in-partition sort, so each
-        output file owns a disjoint value range and its parquet
-        footer min/max make any later filter on those columns skip
-        whole files/row-groups (Delta's ZORDER intent, realized with
-        linear clustering — one dimension deep is what range
-        partitioning gives; for the offset-and-time predicates pools
-        actually serve, linear beats interleaved bits).  The default
-        keeps the ingest-order offset sort.
+        output file owns a disjoint value range and its recorded
+        min/max make any later filter on those columns skip whole
+        files/row-groups (Delta's ZORDER intent, realized with linear
+        clustering — one dimension deep is what range partitioning
+        gives; for the offset-and-time predicates pools actually
+        serve, linear beats interleaved bits).  The default keeps the
+        ingest-order offset sort.
 
         ``zorder=True`` (with two or more numeric ``sort_by`` columns)
         clusters on the Morton-interleaved key instead
@@ -810,10 +522,9 @@ class Pool:
         at once, so multi-predicate scans prune multiplicatively where
         the linear sort prunes only its leading column.
 
-        Holds the writer lock for the WHOLE operation: a load_batch
-        landing between the dir snapshot and the manifest swap would
-        otherwise be silently orphaned (its commit never in the new
-        manifest) — lost data, not just a lost listing.
+        Holds the writer lock for the WHOLE operation: a commit landing
+        between the snapshot and the append would otherwise race the
+        merge's view of the live files.
         """
         if zorder and len(sort_by or []) < 2:
             raise ValueError(
@@ -821,63 +532,45 @@ class Pool:
                 "a one-column 'z-order' is just a linear sort; ask for "
                 "that explicitly rather than getting it silently"
             )
-        if self._log is not None:
-            with self.writer_lock():
-                return self._compact_txlog(
-                    small_bytes, sort_by, zorder, target_file_bytes
-                )
         with self.writer_lock():
-            return self._compact_locked(
-                small_bytes, sort_by, zorder, target_file_bytes
+            snap = self._log.snapshot()
+            files = list(snap["files"].values())
+            if len(files) <= 1:
+                return len(files)
+            merged = files
+            if small_bytes is not None:
+                # TxLog.append records every file's size, as the Delta
+                # spec requires: size-tiering is pure metadata
+                merged = [f for f in files if (f.get("size") or 0) < small_bytes]
+                if len(merged) <= 1:
+                    return 0  # nothing worth merging at this tier
+            snapshot = self.spark.read.schema(self._schema(snap)).parquet(
+                *[os.path.join(self.path, f["path"]) for f in merged]
             )
-
-    def _commit_size(self, name: str) -> int:
-        return self._fs.tree_size(os.path.join(self.path, name))
-
-    def _compact_locked(
-        self,
-        small_bytes: int | None = None,
-        sort_by: list[str] | None = None,
-        zorder: bool = False,
-        target_file_bytes: int | None = None,
-    ) -> int:
-        old_names = self._commit_names()
-        if len(old_names) <= 1:
-            return len(old_names)
-        if small_bytes is None:
-            merged, kept = list(old_names), []
-        else:
-            merged = [n for n in old_names if self._commit_size(n) < small_bytes]
-            kept = [n for n in old_names if n not in set(merged)]
-            if len(merged) <= 1:
-                return 0  # nothing worth merging at this tier
-        current = self._schemas(self._read_manifest())[-1][1]
-        snapshot = self._read_commits(merged, T.StructType.fromJson(json.loads(current)))
-        # range exchange gives disjoint per-file value ranges; the
-        # in-partition sort tightens row-group stats within a file
-        snapshot = self._cluster_for_write(
-            snapshot, sort_by, zorder,
-            input_bytes=sum(self._commit_size(n) for n in merged),
-            target_file_bytes=target_file_bytes,
-        )
-        commit_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        tmp = os.path.join(self.path, f".tmp-{commit_id}")
-        snapshot.write.mode("overwrite").parquet(tmp)
-        self._fs.rename(tmp, os.path.join(self.path, f"commit-{commit_id}"))
-        now = time.time()
-        prior = self._read_manifest().get("orphaned", {})
-        # time travel below the merged output would silently miss the
-        # merged-away rows (their commits leave the manifest but the
-        # replacement carries a NEWER name) — raise the as-of floor so
-        # df(as_of=<older>) fails loudly instead.  No read reaches below
-        # the floor, so the schema history collapses to one entry.
-        self._write_manifest(
-            kept + [f"commit-{commit_id}"],
-            {**prior, **{n: now for n in merged}},
-            asof_floor=f"commit-{commit_id}",
-            schemas=[[f"commit-{commit_id}", current]],
-        )
-        return len(merged)
+            snapshot = self._cluster_for_write(
+                snapshot, sort_by, zorder,
+                input_bytes=sum(f.get("size") or 0 for f in merged),
+                target_file_bytes=target_file_bytes,
+            )
+            commit_id = fresh_commit_id()
+            rel_dir = os.path.join("data", f"commit-{commit_id}")
+            snapshot.write.mode("overwrite").parquet(os.path.join(self.path, rel_dir))
+            adds = collect_file_stats(
+                self.path, list_parquet_files(self._fs, self.path, rel_dir)
+            )
+            # same records>0 filter as load_batch: a zero-row part file
+            # (empty repartitionByRange partition) logged statless would
+            # permanently break the offset-metadata fast path (its loop
+            # breaks on any statless file) and never be prunable
+            adds = [a for a in adds if a["records"] > 0]
+            self._log.append(
+                f"commit-{commit_id}",
+                add=adds,
+                remove=[f["path"] for f in merged],
+                floor=f"commit-{commit_id}",
+                schema_json=snapshot.schema.json(),
+            )
+            return len(merged)
 
     #: Compaction's target output file size.  128 MiB parquet is the
     #: classic scan-friendly size (one HDFS-era block / one comfortable
@@ -921,166 +614,26 @@ class Pool:
         # per-commit offset order within each merged file
         return snapshot.coalesce(nparts).sortWithinPartitions("kafka.offset")
 
-    def _compact_txlog(
-        self,
-        small_bytes: int | None = None,
-        sort_by: list[str] | None = None,
-        zorder: bool = False,
-        target_file_bytes: int | None = None,
-    ) -> int:
-        """txlog compaction: size-tier on PER-FILE sizes from the log's
-        records (no filesystem stat pass), rewrite the merged set, and
-        publish adds+removes in ONE log append — readers mid-scan keep
-        the old files (vacuum reclaims them after the grace window).
-        The as-of floor rides the same entry.  Returns files merged
-        (the txlog analog of commits merged: the unit of this format
-        is the file)."""
-        from .txlog import collect_file_stats, list_parquet_files  # noqa: PLC0415
-
-        snap = self._log.snapshot()
-        files = list(snap["files"].values())
-        if len(files) <= 1:
-            return len(files)
-        if small_bytes is None:
-            merged = files
-        else:
-            # per-file sizes from the LOG's add actions — size-tiering
-            # decides from pure metadata, no filesystem pass at all
-            # (files logged before sizes were recorded fall back to one
-            # stat call)
-            merged = [
-                f
-                for f in files
-                if (
-                    f["size"]
-                    if f.get("size") is not None
-                    else self._fs.tree_size(os.path.dirname(os.path.join(self.path, f["path"])))
-                )
-                < small_bytes
-            ]
-            if len(merged) <= 1:
-                return 0
-        paths = [os.path.join(self.path, f["path"]) for f in merged]
-        snapshot = self.spark.read.schema(
-            self._txlog_schema(files, snap.get("schema_string"))
-        ).parquet(*paths)
-        snapshot = self._cluster_for_write(
-            snapshot, sort_by, zorder,
-            input_bytes=sum(
-                f["size"]
-                if f.get("size") is not None
-                else self._fs.tree_size(
-                    os.path.dirname(os.path.join(self.path, f["path"]))
-                )
-                for f in merged
-            ),
-            target_file_bytes=target_file_bytes,
-        )
-        commit_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        rel_dir = os.path.join("data", f"commit-{commit_id}")
-        snapshot.write.mode("overwrite").parquet(os.path.join(self.path, rel_dir))
-        adds = collect_file_stats(
-            self.path, list_parquet_files(self._fs, self.path, rel_dir)
-        )
-        # same records>0 filter as _load_batch_txlog: a zero-row part
-        # file (empty repartitionByRange partition) logged statless
-        # would permanently break the offset-metadata fast path (its
-        # loop breaks on any statless file) and never be prunable
-        adds = [a for a in adds if a["records"] > 0]
-        self._log.append(
-            f"commit-{commit_id}",
-            add=adds,
-            remove=[f["path"] for f in merged],
-            floor=f"commit-{commit_id}",
-            schema_json=snapshot.schema.json(),
-        )
-        return len(merged)
-
-    def _read_commits(self, commits: list[str], schema: T.StructType) -> DataFrame:
-        """Read of a commit subset as one parquet scan with the recorded
-        table schema (``df()`` and compaction's input selector)."""
-        return self.spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, c) for c in commits]
-        )
-
     def vacuum(
         self,
         grace_seconds: float = 3600.0,
         unpublished_grace_seconds: float | None = None,
     ) -> int:
-        """Delete commit dirs that left the manifest more than
-        ``grace_seconds`` ago (grace measured from ORPHANING time, not
-        the dir's write mtime — a 2-hour-old commit compacted away one
-        second ago is still protected). Dirs on disk but absent from
-        both the live list and the orphan record were never visible to
-        manifest readers (crashed half-writes); those fall back to the
-        mtime clock under ``unpublished_grace_seconds`` — which floors
-        at max(grace, 1h) by default, because on a ``rename_is_copy``
-        backend an IN-FLIGHT direct commit looks exactly like a crashed
-        one until its manifest append lands (the Delta VACUUM retention
-        contract: never set it below your longest writer).  Pass it
-        explicitly only when no writer can be active.  Returns dirs
-        removed."""
-        removed = 0
-        now = time.time()
+        """Delete data files that were REMOVED from the log more than
+        ``grace_seconds`` ago (grace measured from the removal, not the
+        file's write mtime — a 2-hour-old file compacted away one
+        second ago is still protected).  Files on disk but never logged
+        were never visible to readers (crashed pre-append writes);
+        those fall to the mtime clock under
+        ``unpublished_grace_seconds``, which floors at max(grace, 1h) by
+        default, because an IN-FLIGHT commit looks exactly like a
+        crashed one until its log append lands (the Delta VACUUM
+        retention contract: never set it below your longest writer).
+        Pass it explicitly only when no writer can be active.  Empty
+        ``data/commit-*`` dirs are swept with their last file.  Returns
+        files removed."""
         if unpublished_grace_seconds is None:
             unpublished_grace_seconds = max(grace_seconds, 3600.0)
-        if self._log is not None:
-            return self._vacuum_txlog(grace_seconds, unpublished_grace_seconds, now)
-        # '.tmp-*' dirs are writes that crashed between the Spark write
-        # and os.rename — never referenced by the manifest or visible to
-        # any reader, so reclaim them on the mtime clock.
-        for d in self._fs.listdir(self.path):
-            full = os.path.join(self.path, d)
-            if not (d.startswith(".tmp-") and self._fs.isdir(full)):
-                continue
-            if now - self._fs.mtime(full) >= unpublished_grace_seconds:
-                self._fs.rmtree(full)
-                removed += 1
-        with self.writer_lock():
-            m = self._read_manifest()
-            keep = set(m["commits"])
-            orphaned = m.get("orphaned", {})
-            orphan_removed = 0
-            remaining_orphans = dict(orphaned)
-            # on-disk commit dirs that the manifest no longer lists
-            for name in sorted(self._fs.listdir(self.path)):
-                full = os.path.join(self.path, name)
-                if not (
-                    name.startswith("commit-")
-                    and name not in keep
-                    and self._fs.isdir(full)
-                ):
-                    continue
-                # orphan-recorded dirs were PUBLISHED then superseded:
-                # the orphaning clock + reader grace applies.  A dir
-                # with NO orphan record is either a crashed half-write
-                # or an IN-FLIGHT direct commit awaiting its manifest
-                # append — only the (floored) unpublished grace may
-                # touch it.
-                if name in orphaned:
-                    since, cutoff = orphaned[name], grace_seconds
-                else:
-                    since = self._fs.mtime(full)
-                    cutoff = unpublished_grace_seconds
-                if now - since >= cutoff:
-                    self._fs.rmtree(full)
-                    remaining_orphans.pop(name, None)
-                    orphan_removed += 1
-            if orphan_removed:
-                self._write_manifest(m["commits"], remaining_orphans)
-            return removed + orphan_removed
-
-    def _vacuum_txlog(
-        self, grace_seconds: float, unpublished_grace_seconds: float, now: float
-    ) -> int:
-        """txlog vacuum: delete data files that are (a) REMOVED from the
-        log longer than the reader grace, or (b) on disk but never
-        logged (crashed pre-append writes) and older than the
-        unpublished grace — never set that below your longest writer,
-        an in-flight commit looks exactly like a crashed one until its
-        log append lands.  Empty ``data/commit-*`` dirs are swept with
-        their last file."""
         if grace_seconds > self._log.TOMBSTONE_RETENTION_S:
             # checkpoints drop tombstones past the retention window, so
             # a longer reader grace is unenforceable: the orphaning
@@ -1094,6 +647,7 @@ class Pool:
                 "raise TxLog.TOMBSTONE_RETENTION_S (before tombstones "
                 "age out) instead"
             )
+        now = time.time()
         removed = 0
         with self.writer_lock():
             snap = self._log.snapshot()

@@ -2,22 +2,19 @@
 
 The Pool's DATA path is Spark (``spark.read.parquet`` / ``df.write``),
 which already speaks any Hadoop-compatible filesystem.  Everything
-else — manifest and sidecar IO, commit-dir renames, the writer lock —
-was raw ``os.*`` calls, i.e. posix-only.  This module puts those calls
-behind one small interface so an object-storage pool only swaps the
-backend object, never touches Pool logic.
+else — the transaction log, ``_pool.json`` and sidecar IO, the writer
+lock, vacuum's listing and deletes — goes through one small interface,
+so an object-storage pool only swaps the backend object, never touches
+Pool logic.  No operation here renames data: a commit is published by
+a log append, never by moving files.
 
 Object-storage mapping (S3/GCS/ABFS), for the future backend:
 
-- ``write_atomic``     -> a plain PUT (object stores are atomic per key;
-                          no tmp+rename dance needed).
-- ``rename`` (commit publish) -> server-side copy + delete, or better:
-                          skip the rename entirely and write data to its
-                          final key prefix, since VISIBILITY is carried
-                          by the manifest, not the rename (the manifest
-                          is the only thing readers list from).
-- ``create_exclusive`` (writer lock) -> conditional put: S3
-                          ``If-None-Match: *``, GCS
+- ``write_json_atomic``/``write_bytes_atomic`` -> a plain PUT (object
+                          stores are atomic per key; no tmp+rename
+                          dance needed).
+- ``create_exclusive`` (writer lock, log version claim) -> conditional
+                          put: S3 ``If-None-Match: *``, GCS
                           ``ifGenerationMatch=0``; stale-break maps to a
                           conditional DELETE on the observed
                           generation/ETag, which closes the TOCTOU the
@@ -27,7 +24,7 @@ Object-storage mapping (S3/GCS/ABFS), for the future backend:
 - ``listdir``/``isdir``-> prefix LIST with delimiter '/'.
 - ``mtime``            -> the object's Last-Modified.
 
-Everything here is driver-side small-file IO (manifests are KBs), so
+Everything here is driver-side small-file IO (log entries are KBs), so
 per-call HTTP latency is fine; the 100-TB data volume never flows
 through this interface.
 """
@@ -42,12 +39,6 @@ import uuid
 
 class PosixStorage:
     """Default backend: local / NFS / any mounted filesystem."""
-
-    #: posix rename is an O(1) metadata op; object-store backends set
-    #: True (a "rename" copies every byte server-side), which switches
-    #: flat-pool commits to the rename-free direct-write path (the
-    #: manifest append is the visibility point either way).
-    rename_is_copy = False
 
     # -- small-file IO ------------------------------------------------------
 
@@ -108,9 +99,6 @@ class PosixStorage:
     def makedirs(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
 
-    def rename(self, src: str, dst: str) -> None:
-        os.rename(src, dst)
-
     def rmtree(self, path: str) -> None:
         shutil.rmtree(path)
 
@@ -119,19 +107,6 @@ class PosixStorage:
 
     def mtime(self, path: str) -> float:
         return os.path.getmtime(path)
-
-    def tree_size(self, path: str) -> int:
-        """Total bytes under ``path`` (a commit dir).  Drives
-        size-tiered compaction; object stores get this from LIST
-        metadata without reading any data."""
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        return total
 
     # -- writer lock primitives --------------------------------------------
 
@@ -186,7 +161,7 @@ class PosixStorage:
 class MemoryObjectStorage:
     """In-memory OBJECT store implementing the same seam — the semantic
     model of S3/GCS (and the test double proving the Pool's locking and
-    manifest protocol needs no posix semantics at all).
+    log protocol need no posix semantics at all).
 
     Faithful to object-store rules, deliberately NOT to posix:
 
@@ -200,16 +175,11 @@ class MemoryObjectStorage:
     - ``take_aside`` (stale-lock break) is a CONDITIONAL DELETE on the
       observed generation — one atomic op, so the posix rename-aside
       dance and its residual double-race window simply don't exist
-      here;
-    - ``rename`` is server-side copy + delete per key (how commit
-      publish maps to object stores; the manifest, not the rename, is
-      the reader-visibility point, so per-key non-atomicity is fine).
+      here.
 
     A single ``threading.Lock`` models the store's per-request
     linearizability; all state is (bytes, generation, mtime) per key.
     """
-
-    rename_is_copy = True
 
     def __init__(self):
         import threading
@@ -280,17 +250,6 @@ class MemoryObjectStorage:
     def makedirs(self, path: str) -> None:
         pass  # directories are not objects
 
-    def rename(self, src: str, dst: str) -> None:
-        s, d = self._norm(src), self._norm(dst)
-        with self._lock:
-            moved = False
-            for k in list(self._objects):
-                if k == s or k.startswith(s + "/"):
-                    self._put(d + k[len(s) :], self._objects.pop(k)[0])
-                    moved = True
-            if not moved:
-                raise FileNotFoundError(src)
-
     def rmtree(self, path: str) -> None:
         p = self._norm(path)
         with self._lock:
@@ -316,15 +275,6 @@ class MemoryObjectStorage:
         if not times:
             raise FileNotFoundError(path)
         return max(times)
-
-    def tree_size(self, path: str) -> int:
-        p = self._norm(path)
-        with self._lock:
-            return sum(
-                len(v[0])
-                for k, v in self._objects.items()
-                if k == p or k.startswith(p + "/")
-            )
 
     # -- writer lock primitives (native conditional ops) --------------------
 

@@ -1,17 +1,14 @@
-"""Delta-format transaction log for pools (the interoperable seam).
+"""Delta-format transaction log: the one table format of every pool.
 
-The default pool layout publishes whole COMMIT DIRECTORIES through a
-manifest; readers hand Spark directory paths and rely on parquet
-row-group stats for pruning only after file listing.  A 100-TB
-deployment uses a log of per-FILE actions instead: each committed data
-file is recorded with its row count and column min/max stats, so
+A pool's state is a log of per-FILE actions: each committed data file
+is recorded with its row count, byte size and column min/max stats, so
 
   - visibility is one atomic log append (no rename of data bytes —
-    object-store native, same win as the ``rename_is_copy`` path),
+    object-store native),
   - an offset- or topic-scoped read prunes FILES driver-side from the
     log's stats before Spark lists or opens anything,
-  - compaction/vacuum are log operations (add+remove actions) with the
-    same read-isolation the manifest gives commit dirs.
+  - compaction/vacuum are log operations (add+remove actions): readers
+    mid-scan keep the files they listed until vacuum's grace lapses.
 
 The on-disk format IS the open Delta Lake transaction-log wire format
 (https://github.com/delta-io/delta/blob/master/PROTOCOL.md):
@@ -210,8 +207,7 @@ class TxLog:
     """Reader/writer for a pool's ``_delta_log/`` directory.
 
     All IO goes through the pool's storage backend; appends must run
-    under the pool's writer lock (version = last + 1 read-modify-write,
-    same critical section as the manifest swap).
+    under the pool's writer lock (version = last + 1 read-modify-write).
 
     Checkpoints: every CHECKPOINT_INTERVAL appends the full table
     state is written as ``<version>.checkpoint.parquet`` + the
@@ -740,9 +736,8 @@ class TxLog:
                 commits.append(e["commit"])
             if e.get("retract"):
                 # a retracted commit is no longer part of pool history:
-                # it must leave the commit list (matching the manifest
-                # format, which deletes it) and never serve as an as-of
-                # target — its files are gone once vacuum runs
+                # it must leave the commit list and never serve as an
+                # as-of target — its files are gone once vacuum runs
                 retracted.add(e["retract"])
                 commits = [c for c in commits if c != e["retract"]]
             if e.get("floor"):

@@ -72,7 +72,7 @@ def starting_offsets_from_pool(
     for topic in topics:
         declared = (partitions_by_topic or {}).get(topic, [0])
         # emptiness is handled inside (one log snapshot serves both the
-        # check and the stats walk on txlog pools)
+        # check and the stats walk)
         saved = pool.next_consumer_offsets_by_partition(topic)
         out[topic] = {
             str(p): saved[p] if saved.get(p, 0) > 0 else -2

@@ -168,7 +168,7 @@ def continuous_sink(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     # The glob sees a commit's files as they land, which can be one
-    # trigger before the commit is published (manifest or log append).
+    # trigger before the log append publishes the commit.
     # The offset watermark keeps the broker exactly-once regardless
     # (the retried/compacted copies of those offsets are dropped); the
     # one divergence from the batch sync loop is a crashed,
