@@ -737,6 +737,7 @@ def cmd_to_kafka(args) -> int:
             from .kafka_wire import wire_produce_df
 
             wire_produce_df(out, args.brokers, args.topic,
+                            batch_size=args.batch_size,
                             compression=getattr(args, "compression", "none"),
                             security=_wire_security())
             return

@@ -1736,7 +1736,8 @@ def wire_produce_df(
     (one numpy CRC-32C pass across the group) when the broker
     negotiates Produce >= v3, one magic-1 MessageSet per slice below
     that — and sent batch by batch.  Python objects exist for one group
-    at a time; the Arrow table holds the payload once.
+    at a time; the Arrow table holds the payload once.  An empty frame
+    opens no connection and sends nothing.
 
     ``pipelined=True`` sends every batch with acks=0 (the protocol's
     fire-and-forget: the broker sends no response, so batches pipeline
@@ -1751,8 +1752,9 @@ def wire_produce_df(
     producer is the partition's only writer during the call, which is
     the sync loop's ordering assumption anyway.
 
-    Driver-side by design: the bounded to-kafka sync is a tail read of
-    the pool (ordered_batch), not a corpus scan.
+    Driver-side by design: the frame is collected whole, so its caller
+    bounds it — ``to_kafka.sync_batches`` hands over one ordered read of
+    at most ``to_kafka.CHUNK_ROWS`` records at a time.
     """
     from pyspark.sql import functions as F  # noqa: PLC0415
 
@@ -1769,6 +1771,8 @@ def wire_produce_df(
             for f in proj.schema.fields
         ]
     ).toArrow()
+    if not tbl.num_rows:
+        return 0
     acks = 0 if pipelined else -1
     group = batch_size * _ENCODE_GROUP
     n = 0

@@ -79,18 +79,15 @@ def ordered_batch(
     size: int,
     topic_col: str = "kafka.topic",
     offset_col: str = "kafka.offset",
-    transform: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """ReadBatch (fifo/lake.go:84-92): `kafka.topic=='T' kafka.offset>=O
-    | head N [| shaper] | sort kafka.offset`.
+    | head N | sort kafka.offset`.  The reference's optional shaper
+    runs on this batch; callers apply it (to_kafka.sync_batches).
 
-    filter + limit push into the parquet scan; the final sort is tiny
-    (≤ size rows)."""
+    filter + limit push into the parquet scan, and the ordered limit
+    plans as one top-k (TakeOrderedAndProject): no global sort."""
     out = df.filter((F.col(topic_col) == topic) & (F.col(offset_col) >= offset))
-    out = out.orderBy(offset_col).limit(size)
-    if transform is not None:
-        out = transform(out)
-    return out.orderBy(offset_col)
+    return out.orderBy(offset_col).limit(size)
 
 
 def tail1(df: DataFrame, key: str) -> DataFrame:

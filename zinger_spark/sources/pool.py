@@ -464,14 +464,28 @@ class Pool:
         """{topic: max offset + 1} over the pool (etl/pool.go:60-81)."""
         return {t: n for (t,), n in self._next_offsets(["kafka.topic"]).items()}
 
-    def read_batch(self, topic: str, offset: int, size: int, transform=None) -> DataFrame:
+    def read_batch(self, topic: str, offset: int, size: int) -> DataFrame:
         """Ordered batch scan (fifo/lake.go:84-92) over a topic-scoped
         read that prunes the files whose recorded topic stats exclude
         the topic or whose max offset is below the batch start — a
         resume-from-cursor read touches only the tail files, not the
         whole topic history."""
         base = self.df(topic=topic, offset_lo=offset)
-        return _ordered_batch(base, topic, offset, size, transform=transform)
+        return _ordered_batch(base, topic, offset, size)
+
+    def scans_files(self, topic: str | None = None, offset_lo: int | None = None) -> bool:
+        """Whether a ``df(topic=topic, offset_lo=offset_lo)`` read would
+        scan any file, from the log alone (no Spark job).  False means
+        the read has no rows, on a pool with no commits too (where
+        ``df`` raises)."""
+        files = list(self._log.snapshot()["files"].values())
+        return bool(prune_files(files, topic=topic, offset_lo=offset_lo))
+
+    def version(self) -> int:
+        """The log's latest version, -1 before the first entry.  Every
+        commit, retraction and compaction moves it; reading it is one
+        listing of ``_delta_log/``, with no replay."""
+        return max(self._log.versions(), default=-1)
 
     def compact(
         self,

@@ -4,8 +4,15 @@ Reference flow (fifo/to.go:29-53, SURVEY §3.3): producer high-water
 mark -> repeated ReadBatch(200) from the pool, encode, produce, until
 drained (sync-point).
 
-Spark mapping: batch mode mirrors the loop with ordered limit-batches;
-continuous mode (the reference's stated future direction,
+Spark mapping: batch mode (``sync_batches``) reads the pending range
+in ordered, single-partition chunks of up to ``CHUNK_ROWS`` records —
+one read for a range that fits — and hands each chunk to the producer
+in one call; the producer cuts the 200-record batches (the wire
+producer by itself, Spark's Kafka sink by its own batching), so the
+Produce requests match the reference's loop without its per-batch
+reads.  A ``--shaper`` keeps the per-batch loop, since the reference
+shapes each ReadBatch.
+Continuous mode (the reference's stated future direction,
 README.md:175-177) is a file-source readStream over the pool's commit
 dirs -> Kafka sink.
 """
@@ -14,11 +21,16 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..sources.pool import Pool
 
 BATCH_SIZE = 200  # records per ReadBatch (fifo/to.go:29)
+#: most records in one egress read (rounded down to a multiple of the
+#: batch size): sync_batches produces a larger range chunk by chunk, so
+#: the wire producer holds one chunk on the driver at a time
+CHUNK_ROWS = 1 << 16
 
 
 def kafka_sink_projection(
@@ -72,34 +84,88 @@ def sync_batches(
     batch_size: int = BATCH_SIZE,
     transform=None,
 ) -> int:
-    """The To.Sync loop (fifo/to.go:31-53): read ordered batches from
-    the pool starting at the producer high-water mark and hand each to
-    ``produce`` until drained. Returns records produced.
+    """The To.Sync loop (fifo/to.go:31-53): hand ``topic``'s pool
+    records from the producer high-water mark ``start_offset`` on to
+    ``produce``, in ``kafka.offset`` order, until the pool is drained.
+    Returns records produced.
 
-    ``produce`` is the broker boundary: df.write.format("kafka") in
-    production; a collector in tests."""
-    total = 0
-    offset = start_offset
+    ``produce`` is the broker boundary: ``df.write.format("kafka")``,
+    or ``kafka_wire.wire_produce_df`` with ``--transport wire``; a
+    collector in tests.  Its first Spark action must read the whole
+    frame: that action's row count is what the observation below
+    reports.
+
+    Without a shaper each read is one ordered window of up to
+    ``CHUNK_ROWS`` records (rounded down to a multiple of
+    ``batch_size``), planned as one top-k: a single partition in offset
+    order, which the producer reads in one Spark job and cuts into
+    ``batch_size`` batches itself.  Chunk breaks fall on batch
+    boundaries, so the Produce requests are the reference's, which
+    re-reads the pool per ``batch_size`` records.  The count and the
+    max offset of a chunk ride an ``Observation`` that ``produce``'s
+    own action completes, at no extra job; a ``produce`` that runs no
+    SQL action is counted once instead.
+
+    With ``transform`` (a shaper) the window is ``batch_size``: the
+    reference applies the shaper inside ReadBatch (fifo/lake.go:84-92),
+    so a boundary-dependent shaper (``head 1``) sees one raw window at
+    a time.  Scan progress tracks the RAW window, with the shaper
+    applied only to what's produced.  (The reference advances by the
+    POST-shaper count — fifo/to.go:51 — which re-sends the tail of a
+    batch a filtering shaper shrank, and stops early on a fully-dropped
+    batch.  Progress-by-scan avoids both without changing shaper
+    semantics.)
+
+    Draining: a full window reads on from its max offset + 1.  A
+    shorter one drained the log as read, so the loop ends unless the
+    log moved meanwhile (a commit landed); an empty one always ends
+    it, as the reference's loop stops at its first empty read."""
+    window = batch_size if transform is not None else batch_size * max(1, CHUNK_ROWS // batch_size)
+    total, offset = 0, start_offset
     while True:
-        # Scan progress tracks the RAW batch, with the shaper applied
-        # only to what's produced.  (The reference advances by the
-        # POST-shaper count — fifo/to.go:51 — which re-sends the tail
-        # of any batch the shaper thinned, and its loop would also stop
-        # early on a fully-dropped batch.  Progress-by-scan avoids both
-        # without changing shaper semantics.)
-        raw = pool.read_batch(topic, offset, batch_size)
-        stats = raw.agg(
-            F.count(F.lit(1)).alias("n"), F.max("kafka.offset").alias("mx")
-        ).collect()[0]
-        if stats["n"] == 0:
+        version = pool.version()
+        if not pool.scans_files(topic=topic, offset_lo=offset):
             return total
-        batch = transform(raw) if transform is not None else raw
-        rows = batch.count() if transform is not None else stats["n"]
-        if rows:
-            produce(batch)
-            total += rows
-        # next offset = max RAW offset in the scan window + 1
+        raw = pool.read_batch(topic, offset, window)
+        if transform is None:
+            obs = Observation()
+            produce(raw.observe(obs, *_range_stats()))
+            stats = _completed(raw.sparkSession, obs) or raw.agg(*_range_stats()).first()
+            total += stats["n"]
+        else:
+            stats = raw.agg(*_range_stats()).first()
+            batch = transform(raw)
+            rows = batch.count() if stats["n"] else 0
+            if rows:
+                produce(batch)
+                total += rows
+        if not stats["n"] or (stats["n"] < window and pool.version() == version):
+            return total
         offset = stats["mx"] + 1
+
+
+def _range_stats() -> tuple[Column, Column]:
+    return F.count(F.lit(1)).alias("n"), F.max("kafka.offset").alias("mx")
+
+
+#: longest wait, ms, for Spark's listener bus to deliver a finished
+#: action's observed metrics before sync_batches counts instead
+_LISTENER_WAIT_MS = 60_000
+
+
+def _completed(spark: SparkSession, obs: Observation) -> dict | None:
+    """``obs``'s metrics if an action completed it, else None.
+
+    ``Observation.get`` blocks forever on a frame no SQL action ran.
+    An action's metrics reach the observation through the listener
+    bus once the action has returned, so the bus is drained first:
+    the check then sees every action that ran, and never waits on
+    one that did not."""
+    try:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(_LISTENER_WAIT_MS)
+    except Py4JError:  # still busy after the wait: the caller counts
+        return None
+    return obs.get if obs._jo.future().isCompleted() else None
 
 
 # Broker-free produce target for tests/demos ONLY: rows collected per
