@@ -177,6 +177,32 @@ def test_could_be_narrow_reads_size_suffixes(spark, max_pb):
             spark.conf.set(key, prior)
 
 
+def test_could_be_narrow_probes_large_plans_not_split_by_size(spark, tmp_path):
+    """Only a scan-backed plan is taken as wide from its size estimate:
+    a 10^9-row range in one slice, or coalesced to one partition, is
+    estimated at 8 GB and still plans to one partition, so it must be
+    probed.  A parquet scan estimated above the bound is not."""
+    assert zdedup._could_be_narrow(spark.range(10**9, numPartitions=1), want=2) is True
+    assert zdedup._could_be_narrow(spark.range(10**9).coalesce(1), want=2) is True
+    assert zdedup._could_be_narrow(spark.range(10**9).repartition(1), want=2) is True
+    assert zdedup._could_be_narrow(spark.range(10**9, numPartitions=4), want=2) is False
+
+    path = str(tmp_path / "scan.parquet")
+    spark.range(100).write.parquet(path)
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "16")
+    try:
+        scan = spark.read.parquet(path)
+        assert zdedup._could_be_narrow(scan.filter("id > 3"), want=2) is False
+        assert zdedup._could_be_narrow(scan.coalesce(1), want=2) is True
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
 def test_simhash_similar_docs_close(spark):
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),

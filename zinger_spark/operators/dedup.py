@@ -83,24 +83,55 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
 
 
 def _could_be_narrow(df: DataFrame, want: int) -> bool:
-    """True when the optimizer's size estimate says ``df`` might plan
-    to fewer than ``want`` partitions (size < want x maxPartitionBytes)
+    """True unless ``df`` surely plans to at least ``want`` partitions
     — the cheap, no-job pre-filter for the exact RDD-partition probe.
-    maxPartitionBytes comes from the JVM's SQLConf, already parsed to
-    bytes, so any user spelling (``128m``, ``1g``, ``134217728``)
-    counts.  Estimation failures err on True (probe to be sure)."""
+
+    "Surely" needs both an optimizer size estimate of at least ``want``
+    x maxPartitionBytes and a plan whose splits follow that size: every
+    leaf a file scan or a ``Range`` of at least ``want`` slices, and no
+    repartition or coalesce to fewer than ``want`` partitions.  A large
+    in-memory, cached or coalesced input says nothing about its split
+    count from its size, so it is probed.  maxPartitionBytes comes from
+    the JVM's SQLConf, already parsed to bytes, so any user spelling
+    (``128m``, ``1g``, ``134217728``) counts.  Estimation failures err
+    on True (probe to be sure)."""
     try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
+        plan = df._jdf.queryExecution().optimizedPlan()
+        size = int(str(plan.stats().sizeInBytes()))
         max_pb = int(
             df.sparkSession._jsparkSession.sessionState()
             .conf()
             .filesMaxPartitionBytes()
         )
-        return size < want * max_pb
+        return size < want * max_pb or not _splits_by_size(plan, want)
     except Exception:  # noqa: BLE001 - any estimation failure
         return True
+
+
+def _splits_by_size(plan, want: int) -> bool:
+    """Every leaf of the logical ``plan`` is a file scan or a ``Range``
+    of at least ``want`` slices, and no repartition in it asks for fewer
+    than ``want`` partitions."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind in ("Repartition", "RepartitionByExpression") and node.numPartitions() < want:
+            return False
+        children = node.children()
+        n = children.size()
+        if n == 0:
+            if kind == "Range":
+                slices = node.numSlices()
+                if not (slices.isDefined() and slices.get() >= want):
+                    return False
+            elif not (
+                kind == "LogicalRelation"
+                and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
+            ):
+                return False
+        stack.extend(children.apply(i) for i in range(n))
+    return True
 
 
 def exploded_shingles(
@@ -138,7 +169,9 @@ def exploded_shingles(
     running a job; only inputs small enough that they could POSSIBLY
     plan narrower than the session's parallelism (size < parallelism x
     maxPartitionBytes) pay the exact RDD probe, i.e. the probe cost
-    now scales to zero as the input grows."""
+    now scales to zero as the input grows.  The size stands for the
+    split count only on scan-backed plans: a large but coalesced,
+    cached or in-memory input is probed too (``_could_be_narrow``)."""
     spark = df.sparkSession
     want = spark.sparkContext.defaultParallelism
     if _could_be_narrow(df, want):

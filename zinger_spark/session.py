@@ -5,6 +5,12 @@ chosen to hold on a large cluster: AQE on (runtime re-plan, skew-join
 splitting, partition coalescing), UTC session timezone (oracle parity,
 see pitfalls in connectjson timestamp handling), Arrow enabled for the
 few pandas-UDF code paths.
+
+PySpark's DataFrame debugging hook is off: the driver builds every
+plan one ``Column`` call at a time over py4j, and the hook made each of
+those calls capture its Python call site for the JVM (costs and the
+error-context trade-off at the setting below).  ``__spark_entry__.entry``
+runs on its caller's own session and keeps PySpark's default there.
 """
 
 from __future__ import annotations
@@ -71,6 +77,22 @@ def get_spark(
         # on every revisit.  Compiled classes are small; keep 10x more.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
+        # PySpark 4.1 wraps every Column method and F.col in
+        # errors.utils._with_origin while this is true (the default).
+        # Each wrapped call then makes ~6 py4j round trips (active
+        # session, PySparkCurrentOrigin, the stack-trace depth conf, set
+        # and clear the origin), walks the Python stack, and tries
+        # `import IPython` / `import ipykernel`.  Off, the main thread
+        # of perfbench's timed cdc_trickle cycle makes 2735 py4j round
+        # trips instead of 9535 (seed 1), and the driver's peak RSS drops
+        # 152 -> 127 MB, mostly IPython's import footprint.
+        # Trade-off: a Spark error's query context no longer carries the
+        # Python file:line of the DataFrame call that built the failing
+        # expression; the JVM context and the Python traceback remain.
+        # PySpark reads this once per process, at the first Column call,
+        # from the then-active session (errors.utils._enable_debugging_cache),
+        # so it must be set here, before any plan is built.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # In local[N] the "driver" heap IS the whole engine: all N task
         # slots' execution/storage memory plus every broadcast live in
         # this one JVM.  8g was tight for 32 slots on sf3-sized runs
